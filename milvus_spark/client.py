@@ -18,13 +18,15 @@ from __future__ import annotations
 import json
 import os
 import re
-from typing import Any, Optional, Sequence
+import tempfile
+from typing import Any, Callable, NamedTuple, Optional, Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from milvus_spark.operators.bitset import _EVERY_EPOCH, epoch_col, normalize_mask
 from milvus_spark.operators.knn import brute_force_search
 from milvus_spark.operators.lifecycle import TS_COL, Collection
 from milvus_spark.plans.expr import apply_filter, compile_expr
@@ -38,6 +40,52 @@ WARMUP_VALUES = ("sync", "async", "disable")
 # parquet-footer row counts memoized per (path, size, mtime_ns) — see
 # _codes_num_rows; stat-validated, so rewrites invalidate naturally
 _PARQUET_ROWS_MEMO: dict = {}
+
+
+# index types whose build reads a float or binary vector field
+_VECTOR_INDEXES = (
+    "HNSW", "HNSW_SQ", "HNSW_PQ", "HNSW_PRQ", "IVF_RABITQ", "IVF_FLAT",
+    "DISKANN", "SCANN", "BIN_IVF_FLAT", "IVF_PQ", "IVF_SQ8", "LSH",
+)
+# refresh_index families: TEXT_MATCH, the scalar and graph families below,
+# and the rest of _VECTOR_INDEXES (the trained family)
+_SCALAR_REFRESH = (
+    "INVERTED", "BITMAP", "SORT", "STL_SORT", "TRIE", "HYBRID", "RTREE",
+    "NGRAM", "SPARSE_WAND", "SPARSE_INVERTED", "MINHASH_LSH",
+)
+_GRAPH_INDEXES = ("HNSW", "HNSW_SQ", "HNSW_PQ", "HNSW_PRQ")
+
+
+class _IndexedCopies(NamedTuple):
+    """One index artifact as refresh_index's version-mask protocol sees
+    it (the per-family table is in refresh_index's docstring)."""
+
+    ids: DataFrame  # (id long, _v long): every indexed copy and its version
+    n_expected: int  # rows visible at the build that the snapshot holds
+    bound: int  # mask bound for pks deleted since the build
+    append: Callable  # (pairs, masked) -> mask to persist; writes new rows
+    flat_bound: int = _EVERY_EPOCH  # bound of a legacy plain-int mask entry
+    versioned: bool = True  # False: masks hide new copies too; refuse re-use
+    snapshot: Optional[DataFrame] = None  # what the guard counts; None = ids
+
+
+def atomic_write_json(path: str, obj, **dump_kw) -> None:
+    """Write JSON so readers see the old file or the new one, never a
+    torn one: dump to a temp file in the same directory, fsync it, then
+    ``os.replace`` it over ``path``."""
+    fd, tmp = tempfile.mkstemp(
+        prefix=os.path.basename(path) + ".", suffix=".tmp",
+        dir=os.path.dirname(path) or ".",
+    )
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, **dump_kw)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def _validate_warmup(v) -> None:
@@ -301,8 +349,9 @@ class MilvusSparkClient:
         return cache[db_name]
 
     def _save_db_props(self, db_name: str, props: dict) -> None:
-        with open(self._db_props_path(db_name), "w") as f:
-            json.dump(props, f, indent=1, sort_keys=True)
+        atomic_write_json(
+            self._db_props_path(db_name), props, indent=1, sort_keys=True
+        )
         getattr(self, "_db_props_cache", {}).pop(db_name, None)
 
     def _require_db(self, db_name: str) -> None:
@@ -436,8 +485,7 @@ class MilvusSparkClient:
 
     # ------------------------------------------------------------- catalog
     def _save_catalog(self) -> None:
-        with open(self._catalog_path, "w") as f:
-            json.dump(self._catalog, f, indent=2)
+        atomic_write_json(self._catalog_path, self._catalog, indent=2)
 
     DYNAMIC_COL = "$meta"
 
@@ -793,8 +841,7 @@ class MilvusSparkClient:
         validate_replicate_configuration(
             configuration, current, self.CLUSTER_ID, self.PCHANNELS
         )
-        with open(self._replicate_path(), "w") as f:
-            json.dump(configuration, f, indent=1)
+        atomic_write_json(self._replicate_path(), configuration, indent=1)
 
     def get_replicate_configuration(self) -> Optional[dict]:
         if not os.path.exists(self._replicate_path()):
@@ -1005,8 +1052,9 @@ class MilvusSparkClient:
                 if k in ("pk", "vector", "vector_fields", "metric", "fields")
             },
         }
-        with open(os.path.join(out_path, "_manifest.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
+        atomic_write_json(
+            os.path.join(out_path, "_manifest.json"), manifest, indent=1
+        )
         return manifest
 
     def restore_external_snapshot(self, new_name: str, path: str) -> None:
@@ -2132,6 +2180,26 @@ class MilvusSparkClient:
     force_merge = optimize  # reference exposes both names for the same op
 
     # -------------------------------------------------------------- indexes
+    @staticmethod
+    def _vector_corpus(
+        meta: dict, df: DataFrame, field: str, mips_m2: Optional[float] = None
+    ) -> DataFrame:
+        """The stored form of a float vector field, shared by every vector
+        index build and refresh: COSINE collections store unit-normalized
+        vectors (cosine is scale-invariant, and L2 cells on the unit
+        sphere are cosine cells); an IP graph stores MIPS-augmented
+        vectors under its bound ``mips_m2`` (operators/hnsw.py); anything
+        else is cast to array<double>."""
+        from milvus_spark.operators.hnsw import mips_augment
+        from milvus_spark.operators.ivf import l2_normalize
+
+        met = meta.get("metric", "COSINE")
+        if met == "COSINE":
+            return l2_normalize(df, field)
+        if met == "IP" and mips_m2 is not None:
+            return mips_augment(df, field, mips_m2)
+        return df.withColumn(field, F.col(field).cast("array<double>"))
+
     def create_index(
         self, name: str, field: str, index_type: str = "IVF_FLAT",
         params: Optional[dict] = None,
@@ -2197,6 +2265,10 @@ class MilvusSparkClient:
                     f"cannot build {itype} on a VARCHAR primary-key "
                     "collection — the exact scan serves VARCHAR-pk search"
                 )
+        if itype in _VECTOR_INDEXES and field not in (
+            meta.get("vector_fields") or [meta.get("vector")]
+        ):
+            raise ValueError(f"{itype} requires a vector field, got {field!r}")
         if itype == "HNSW":
             # REAL per-segment graph (knowhere's workhorse,
             # SearchOnIndex.cpp): the corpus buckets deterministically by
@@ -2206,41 +2278,18 @@ class MilvusSparkClient:
             # merge, exactly the reference's per-segment fan-out.
             # Unsupported-with-graph regimes (filters, range, snapshots,
             # IP metric) fall back to exact scan at query time.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"HNSW requires a vector field, got {field!r}")
-            from milvus_spark.operators.hnsw import build_hnsw
-            from milvus_spark.operators.ivf import l2_normalize
+            from milvus_spark.operators.hnsw import (
+                SEGMENT_ROWS_DEFAULT, build_hnsw, derive_n_partitions,
+                max_sq_norm,
+            )
 
             df = self._read(name)
-            met = meta.get("metric", "COSINE")
-            if met == "COSINE":
-                corpus = l2_normalize(df, field)
-            elif met == "IP":
-                # MIPS → L2 reduction (Bachrach et al., RecSys'14): augment
-                # each vector with sqrt(M² − ‖x‖²) where M = max corpus
-                # norm; queries augment with 0, and then
-                # ‖x̂ − q̂‖² = M² + ‖q‖² − 2⟨x,q⟩ — so L2 beam search over
-                # the augmented graph ranks EXACTLY by inner product. The
-                # graph thus serves IP searches too (score recovered as
-                # (M² + ‖q‖² − sqdist)/2 at dispatch).
-                v = F.col(field).cast("array<double>")
-                n2 = F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
-                m2 = float(
-                    df.select(F.max(n2).alias("m2")).first()["m2"] or 0.0
-                )
-                entry["mips_m2"] = m2
-                corpus = df.withColumn(
-                    field,
-                    F.concat(
-                        v, F.array(F.sqrt(F.greatest(F.lit(m2) - n2, F.lit(0.0))))
-                    ),
-                )
-            else:
-                corpus = df.withColumn(field, F.col(field).cast("array<double>"))
-            from milvus_spark.operators.hnsw import (
-                SEGMENT_ROWS_DEFAULT, derive_n_partitions,
-            )
+            if meta.get("metric", "COSINE") == "IP":
+                # the graph serves IP through the MIPS → L2 reduction
+                # (operators/hnsw.py mips_augment); M² is the corpus's
+                # max squared norm, kept for refreshes and dispatch
+                entry["mips_m2"] = max_sq_norm(df, field)
+            corpus = self._vector_corpus(meta, df, field, entry.get("mips_m2"))
 
             # bucket count from corpus size (the seal-policy analog,
             # component_param.go:5605-5630): per-bucket build work is
@@ -2286,13 +2335,10 @@ class MilvusSparkClient:
             # codebooks), beams rank by quantized distances, and an
             # optional refine step re-scores refine_k x k candidates at
             # refine_type precision (FP32 = the raw corpus).
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"{itype} requires a vector field, got {field!r}")
             from milvus_spark.operators.hnsw import (
                 SEGMENT_ROWS_DEFAULT, build_hnsw, derive_n_partitions,
+                max_sq_norm,
             )
-            from milvus_spark.operators.ivf import l2_normalize
             from milvus_spark.operators.quantizers import (
                 check_bool, check_int, check_refine_type, check_sq_type,
                 quantize_frame, train_qspec,
@@ -2301,22 +2347,9 @@ class MilvusSparkClient:
             mm = check_int(params, "M", 2, 2048, 8)
             efc = check_int(params, "efConstruction", 1, 2**31 - 1, 64)
             df = self._read(name)
-            met = meta.get("metric", "COSINE")
-            if met == "COSINE":
-                corpus = l2_normalize(df, field)
-            elif met == "IP":
-                v = F.col(field).cast("array<double>")
-                n2 = F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
-                m2 = float(df.select(F.max(n2).alias("m2")).first()["m2"] or 0.0)
-                entry["mips_m2"] = m2
-                corpus = df.withColumn(
-                    field,
-                    F.concat(
-                        v, F.array(F.sqrt(F.greatest(F.lit(m2) - n2, F.lit(0.0))))
-                    ),
-                )
-            else:
-                corpus = df.withColumn(field, F.col(field).cast("array<double>"))
+            if meta.get("metric", "COSINE") == "IP":
+                entry["mips_m2"] = max_sq_norm(df, field)
+            corpus = self._vector_corpus(meta, df, field, entry.get("mips_m2"))
             row0 = corpus.select(field).first()
             if row0 is None or row0[0] is None:
                 raise ValueError(f"cannot build {itype} on empty collection {name!r}")
@@ -2368,18 +2401,17 @@ class MilvusSparkClient:
             g.write.mode("overwrite").partitionBy("part").parquet(
                 os.path.join(idx_dir, "graph")
             )
-            with open(os.path.join(idx_dir, "quantizer.json"), "w") as f:
-                json.dump(
-                    {
-                        "quantizer": qspec,
-                        "refine": {
-                            "enabled": refine,
-                            "type": refine_type,
-                            "spec": refine_spec,
-                        },
+            atomic_write_json(
+                os.path.join(idx_dir, "quantizer.json"),
+                {
+                    "quantizer": qspec,
+                    "refine": {
+                        "enabled": refine,
+                        "type": refine_type,
+                        "spec": refine_spec,
                     },
-                    f,
-                )
+                },
+            )
             entry["n_partitions"] = nparts
             entry["epochs"] = [{"base": 0, "n": nparts}]
             entry["refine"] = refine
@@ -2391,14 +2423,9 @@ class MilvusSparkClient:
             # optional refine at refine_type precision. Codes lay out
             # hive-partitioned by cluster_id, so nprobe prunes whole
             # directories exactly like IVF_FLAT.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"IVF_RABITQ requires a vector field, got {field!r}")
             import numpy as np
 
-            from milvus_spark.operators.ivf import (
-                assign_clusters, build_centroids, l2_normalize,
-            )
+            from milvus_spark.operators.ivf import assign_clusters, build_centroids
             from milvus_spark.operators.quantizers import (
                 check_bool, check_int, check_refine_type, rabitq_encode_np,
                 rotation_matrix, train_qspec,
@@ -2411,13 +2438,7 @@ class MilvusSparkClient:
                 if (refine or "refine_type" in params)
                 else "FP32"
             )
-            df = self._read(name)
-            met = meta.get("metric", "COSINE")
-            corpus = (
-                l2_normalize(df, field)
-                if met == "COSINE"
-                else df.withColumn(field, F.col(field).cast("array<double>"))
-            )
+            corpus = self._vector_corpus(meta, self._read(name), field)
             row0 = corpus.select(field).first()
             if row0 is None or row0[0] is None:
                 raise ValueError(
@@ -2462,24 +2483,22 @@ class MilvusSparkClient:
             codes.withColumn("_epoch", F.lit(0).cast("long")).write.mode(
                 "overwrite"
             ).partitionBy("cluster_id").parquet(os.path.join(idx_dir, "codes"))
-            with open(os.path.join(idx_dir, "centroids.json"), "w") as f:
-                json.dump(cents.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "centroids.json"), cents.tolist())
             refine_spec = (
                 train_qspec(corpus, field, refine_type, dim) if refine else None
             )
-            with open(os.path.join(idx_dir, "quantizer.json"), "w") as f:
-                json.dump(
-                    {
-                        "seed": seed,
-                        "dim": dim,
-                        "refine": {
-                            "enabled": refine,
-                            "type": refine_type,
-                            "spec": refine_spec,
-                        },
+            atomic_write_json(
+                os.path.join(idx_dir, "quantizer.json"),
+                {
+                    "seed": seed,
+                    "dim": dim,
+                    "refine": {
+                        "enabled": refine,
+                        "type": refine_type,
+                        "spec": refine_spec,
                     },
-                    f,
-                )
+                },
+            )
             entry["nlist"] = nlist
             entry["refine"] = refine
             entry["cur_epoch"] = 0
@@ -2493,20 +2512,10 @@ class MilvusSparkClient:
             # point is the centroid-pruned partition scan (recall-gated in
             # tests/test_ivf.py); the tuning knobs are recorded and
             # search_list maps onto nprobe at query time.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"{itype} requires a vector field, got {field!r}")
-            from milvus_spark.operators.ivf import (
-                build_centroids, l2_normalize, write_clustered,
-            )
+            from milvus_spark.operators.ivf import build_centroids, write_clustered
 
             nlist = int(params.get("nlist", 16))
-            df = self._read(name)
-            corpus = (
-                l2_normalize(df, field)
-                if meta.get("metric", "COSINE") == "COSINE"
-                else df.withColumn(field, F.col(field).cast("array<double>"))
-            )
+            corpus = self._vector_corpus(meta, self._read(name), field)
             cents = build_centroids(
                 corpus, field, k=nlist,
                 seed=int(params.get("seed", 42)),
@@ -2520,8 +2529,7 @@ class MilvusSparkClient:
                 corpus.withColumn("_epoch", F.lit(0).cast("long")),
                 field, cents, os.path.join(idx_dir, "clustered"),
             )
-            with open(os.path.join(idx_dir, "centroids.json"), "w") as f:
-                json.dump(cents.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "centroids.json"), cents.tolist())
             entry["nlist"] = nlist
             if itype != "IVF_FLAT":
                 entry["graph_params"] = {
@@ -2547,9 +2555,6 @@ class MilvusSparkClient:
             # partitioned by cluster_id, same directory-pruned scan + the
             # same _epoch/refresh/delete-mask lifecycle as the float
             # clustered family.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"BIN_IVF_FLAT requires a vector field, got {field!r}")
             met = str(
                 params.get("metric_type", meta.get("metric", ""))
             ).upper()
@@ -2592,8 +2597,7 @@ class MilvusSparkClient:
                 .partitionBy("cluster_id")
                 .parquet(os.path.join(idx_dir, "clustered"))
             )
-            with open(os.path.join(idx_dir, "centroids.json"), "w") as f:
-                json.dump(cents.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "centroids.json"), cents.tolist())
             entry["nlist"] = nlist
             entry["metric"] = met
             entry["cur_epoch"] = 0
@@ -2603,19 +2607,10 @@ class MilvusSparkClient:
             # ONLY the code table (ADC) and refines the shortlist exactly —
             # operators/pq.py. COSINE collections encode normalized vectors
             # so ascending ADC-L2 order equals descending cosine order.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"IVF_PQ requires a vector field, got {field!r}")
-            from milvus_spark.operators.ivf import l2_normalize
             from milvus_spark.operators.pq import encode_pq, train_codebooks
 
             m = int(params.get("m", 16))
-            df = self._read(name)
-            corpus = (
-                l2_normalize(df, field)
-                if meta.get("metric", "COSINE") == "COSINE"
-                else df.withColumn(field, F.col(field).cast("array<double>"))
-            )
+            corpus = self._vector_corpus(meta, self._read(name), field)
             books = train_codebooks(
                 corpus, field, m=m,
                 k=int(params.get("nbits_k", 16)),
@@ -2634,8 +2629,7 @@ class MilvusSparkClient:
             ).write.mode("overwrite").partitionBy("_shard").parquet(
                 os.path.join(idx_dir, "codes")
             )
-            with open(os.path.join(idx_dir, "codebooks.json"), "w") as f:
-                json.dump(books.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "codebooks.json"), books.tolist())
             entry["m"] = m
         elif itype == "IVF_SQ8":
             # Scalar-quantized index (knowhere IVF_SQ8, index_type.go): one
@@ -2645,18 +2639,9 @@ class MilvusSparkClient:
             # shortlist exactly — operators/sq.py. COSINE collections
             # encode normalized vectors so ascending SQ-L2 order equals
             # descending cosine order.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"IVF_SQ8 requires a vector field, got {field!r}")
-            from milvus_spark.operators.ivf import l2_normalize
             from milvus_spark.operators.sq import encode_sq8, train_sq8
 
-            df = self._read(name)
-            corpus = (
-                l2_normalize(df, field)
-                if meta.get("metric", "COSINE") == "COSINE"
-                else df.withColumn(field, F.col(field).cast("array<double>"))
-            )
+            corpus = self._vector_corpus(meta, self._read(name), field)
             row0 = corpus.select(field).first()
             if row0 is None or row0[0] is None:
                 raise ValueError(f"cannot build IVF_SQ8 on empty collection {name!r}")
@@ -2670,8 +2655,7 @@ class MilvusSparkClient:
             ).write.mode("overwrite").partitionBy("_shard").parquet(
                 os.path.join(idx_dir, "codes")
             )
-            with open(os.path.join(idx_dir, "bounds.json"), "w") as f:
-                json.dump(bounds.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "bounds.json"), bounds.tolist())
         elif itype == "NGRAM":
             # char-n-gram posting table (NgramInvertedIndex.cpp), since r9
             # hive-partitioned by gram-hash bucket and riding the shared
@@ -2864,10 +2848,6 @@ class MilvusSparkClient:
             # family, index_type.go; operators/lsh.py): sign-bucket the
             # corpus once, partitionBy(bucket) so a query's probe list
             # prunes whole bucket directories at the scan.
-            vfs = meta.get("vector_fields") or [meta.get("vector")]
-            if field not in vfs:
-                raise ValueError(f"LSH requires a vector field, got {field!r}")
-            from milvus_spark.operators.ivf import l2_normalize
             from milvus_spark.operators.lsh import hyperplanes, write_bucketed
 
             nbits = int(params.get("nbits", 10))
@@ -2878,12 +2858,7 @@ class MilvusSparkClient:
                 raise ValueError(
                     f"cannot build LSH index on empty collection {name!r}"
                 )
-            df = self._read(name)
-            corpus = (
-                l2_normalize(df, field)
-                if meta.get("metric", "COSINE") == "COSINE"
-                else df.withColumn(field, F.col(field).cast("array<double>"))
-            )
+            corpus = self._vector_corpus(meta, self._read(name), field)
             if "dim" in params:
                 dim = int(params["dim"])  # skip the probe job entirely
             else:
@@ -2899,8 +2874,7 @@ class MilvusSparkClient:
                 corpus.withColumn("_epoch", F.lit(0).cast("long")),
                 field, H, os.path.join(idx_dir, "bucketed"),
             )
-            with open(os.path.join(idx_dir, "hyperplanes.json"), "w") as f:
-                json.dump(H.tolist(), f)
+            atomic_write_json(os.path.join(idx_dir, "hyperplanes.json"), H.tolist())
             entry["nbits"] = nbits
         elif itype == "RTREE":
             # Spatial index over a GEOMETRY (WKT) column (RTreeIndex.cpp —
@@ -3357,37 +3331,67 @@ class MilvusSparkClient:
         index_type: str = "HNSW",
         on_mismatch: str = "error",
     ) -> dict:
-        """Incremental index maintenance — the reference's actual
-        seal-and-index lifecycle (a sealed segment gets ITS OWN graph;
-        the corpus is never re-indexed, flush → buildIndex per new
-        segment): rows inserted since the last build become a NEW epoch
-        of pk-buckets, each with its own self-contained graph, appended
-        to the index artifact; searches fan over old + new buckets and
-        merge, exactly as over old + new segments.
+        """Incremental index maintenance — the reference's seal-and-index
+        lifecycle (flush → buildIndex per new segment; the corpus is never
+        re-indexed): rows inserted since the last build are indexed as a
+        NEW version beside the old ones — a new ``_epoch`` of postings,
+        codes or cluster rows, or a new epoch of graph buckets — and
+        searches fan over every version and merge, exactly as over old +
+        new segments. Trained artifacts keep their training (centroids,
+        codebooks, bounds, hyperplanes, rotation) and encode new rows with
+        it; drift is accepted until a full rebuild.
 
-        IVF family: the trained centroids are kept (the reference assigns
-        new segments to the existing centroids too; drift is accepted
-        until a full rebuild) and the delta is assigned + appended into
-        the cluster-partitioned layout — probe math and partition pruning
-        unchanged.
+        Deletes never rewrite an artifact. Every family runs ONE
+        version-mask protocol — the reference's sealed-segment delete
+        bitset (DeletedRecord.h:69), applied during the search:
 
-        Deletes since the last build join the index entry's persisted
-        DELETE BITSET (the reference's sealed-segment delete mask, applied
-        during the search) — artifacts never rewrite on delete. Upserts
-        (a tombstoned pk reappearing among the new rows) are ACCEPTED via
-        per-epoch version masks (r7): the old copy masks below the new
-        epoch while the re-indexed row serves from it. Refused shapes —
-        duplicate inserts without a tombstone, folded compactions (the
-        artifact no longer matches the pre-build snapshot), masks beyond
-        100k pks — keep the stale-fallback semantics under the default
-        ``on_mismatch="error"``; ``on_mismatch="rebuild"`` instead falls
-        back to a full ``create_index`` with the entry's stored params —
-        the reference's own answer to a compacted segment set (compaction
-        triggers re-index of the affected segments). At 100 TB the
-        incremental path is THE difference between re-indexing the corpus
-        per ingest batch and indexing only the batch; the rebuild
-        fallback is the escape hatch for the shapes that genuinely
-        invalidate the artifact."""
+        1. pks deleted since the build that have a copy in the artifact
+           fold into the entry's ``masked_pks`` as ``[pk, bound]`` pairs:
+           a pk is masked in every copy whose version is below ``bound``
+           (operators/bitset.py). A pk inserted after the build was never
+           indexed, so it never enters the mask (masking it would also
+           hide its re-inserted copy).
+        2. The mask is capped at 100k pks, checked before any pk list is
+           collected on the driver; a delete-heavy collection rebuilds.
+        3. Snapshot guard: every indexed copy must be a row visible at
+           the build or a masked copy, else deletes were compacted away.
+        4. With no new rows, the mask and ``built_ts`` commit here.
+        5. A new row may re-use an indexed pk only if no live (unmasked)
+           copy of it is left — an upsert, whose old copy masks below the
+           new version. A duplicate insert is refused: two live copies of
+           one pk cannot be told apart at search time.
+        6. The family appends the new rows at the new version and commits.
+
+        Per family — the id frame holds every indexed copy, the version
+        column orders copies, the bound masks this round's deletes:
+
+        ==========  =================  =======  ==========  ====================
+        family      id frame           version  bound       legacy shape
+        ==========  =================  =======  ==========  ====================
+        TEXT_MATCH  doclens ids        _epoch   new epoch   —
+        scalar      value artifact +   _epoch   new epoch   —
+                    null sidecar ids
+        trained     clustered / codes  _epoch   new epoch   no _epoch column:
+                    / bucketed pks                          every-epoch bound,
+                                                            every re-used pk
+                                                            refused
+        graph       graph ids          part     bucket      plain-int masks
+                                                count       read as bound =
+                                                            bucket count
+        ==========  =================  =======  ==========  ====================
+
+        The scalar family's snapshot guard counts only the value artifact
+        against the rows its build indexes (non-null, parseable, long
+        enough); the null sidecar still joins the mask and the collision
+        check. The trained family is IVF_FLAT / DISKANN / SCANN /
+        BIN_IVF_FLAT / IVF_RABITQ / IVF_PQ / IVF_SQ8 / LSH; the graph
+        family is HNSW and its quantized variants.
+
+        Refused shapes — duplicate inserts, compacted deletes, masks
+        beyond 100k pks — keep the stale-fallback semantics under the
+        default ``on_mismatch="error"``; ``on_mismatch="rebuild"`` instead
+        falls back to a full ``create_index`` with the entry's stored
+        params — the reference's own answer to a compacted segment set."""
         if on_mismatch not in ("error", "rebuild"):
             raise ValueError(f"on_mismatch must be error|rebuild, got {on_mismatch!r}")
         if on_mismatch == "rebuild":
@@ -3422,13 +3426,7 @@ class MilvusSparkClient:
             )
             self._save_catalog()
             return ent
-        if itype not in (
-            "HNSW", "IVF_FLAT", "DISKANN", "SCANN", "IVF_PQ", "IVF_SQ8", "LSH",
-            "TEXT_MATCH", "INVERTED", "BITMAP", "SORT", "STL_SORT", "TRIE",
-            "HYBRID", "RTREE", "NGRAM", "SPARSE_WAND", "SPARSE_INVERTED",
-            "MINHASH_LSH", "HNSW_SQ", "HNSW_PQ", "HNSW_PRQ", "IVF_RABITQ",
-            "BIN_IVF_FLAT",
-        ):
+        if itype not in _VECTOR_INDEXES + _SCALAR_REFRESH + ("TEXT_MATCH",):
             raise ValueError(
                 f"refresh_index does not support {itype!r}; rebuild with "
                 "create_index"
@@ -3440,20 +3438,6 @@ class MilvusSparkClient:
         if entry["built_ts"] == cur:
             return entry  # nothing inserted since the build
         pk = meta["pk"]
-        # deletes since the last build become part of the persisted DELETE
-        # BITSET (the reference's sealed-segment delete mask applied at
-        # search): sealed graph/cluster artifacts never rewrite on delete.
-        # Only pks ACTUALLY PRESENT in the artifact enter the mask — a row
-        # inserted after the build and then deleted (or deleted-and-
-        # re-inserted) was never indexed, so masking it would bloat every
-        # search's exclusion broadcast AND silently hide the re-inserted
-        # copy indexed by this refresh (the r6 advisor's disappearing-row
-        # bug). The mask is capped so the catalog entry stays small; a
-        # delete-heavy collection should rebuild (compaction +
-        # create_index). HNSW masks are [pk, bound] VERSION pairs (see the
-        # graph branch below); the trained family keeps flat pks and
-        # refuses upsert shapes (its appended layout cannot
-        # version-distinguish two copies of one pk).
         tombs = self._coll(name)._tombstones()
         deleted_df = (
             tombs.filter(F.col(DEL_TS_COL) > entry["built_ts"])
@@ -3467,86 +3451,96 @@ class MilvusSparkClient:
         n_new = new.count()
         n_old = df.filter(F.col(TS_COL) <= entry["built_ts"]).count()
         if itype == "TEXT_MATCH":
-            # Posting-list index rides the same epoch/version-mask
-            # lifecycle as the trained vector family (the reference builds
-            # the tantivy text index per sealed segment and masks deletes
-            # at search): new rows' postings append as a new epoch — base
-            # posting files never rewrite — deletes of indexed docs become
-            # [pk, bound] mask entries, and an upserted pk is accepted iff
-            # it has no LIVE copy left (old postings mask below the new
-            # epoch while the re-tokenized row serves from it).
-            from milvus_spark.operators.bitset import epoch_col, normalize_mask
-            from milvus_spark.operators.text_index import build_text_postings
-
-            dlpath = os.path.join(entry["path"], "doclens")
-            dl = self.spark.read.parquet(dlpath)
-            new_epoch = int(entry.get("cur_epoch", 0)) + 1
-            masked_pairs: dict[int, int] = {
-                p: b for p, b in normalize_mask(entry.get("masked_pks"))
-            }
-            deleted_in_df = (
-                dl.select(F.col("id").alias("_del_pk"))
-                .join(deleted_df, "_del_pk", "left_semi")
-                .distinct()
-                if deleted_df is not None
-                else None
+            art = self._text_copies(entry, pk, new, n_old)
+        elif itype in _SCALAR_REFRESH:
+            art = self._scalar_copies(name, entry, itype, pk, df, new)
+        elif itype in _GRAPH_INDEXES:
+            art = self._graph_copies(meta, entry, itype, field, new, n_new, n_old)
+        else:
+            art = self._trained_copies(meta, entry, itype, field, new, n_old)
+        # 1-2. fold this round's deletes of indexed pks; cap BEFORE
+        # collecting, so a delete-heavy corpus never materializes an
+        # unbounded pk list on the driver just to learn the mask is
+        # oversized (with no new deletes this caps the carried mask)
+        pairs = dict(normalize_mask(entry.get("masked_pks"), art.flat_bound))
+        deleted_in = (
+            art.ids.select(F.col("id").alias("_del_pk"))
+            .join(deleted_df, "_del_pk", "left_semi")
+            .distinct()
+            if deleted_df is not None
+            else None
+        )
+        n_del = deleted_in.count() if deleted_in is not None else 0
+        if len(pairs) + n_del > 100_000:
+            raise ValueError(
+                "refresh_index: delete mask would exceed 100k pks — "
+                "compact and rebuild with create_index"
+            )
+        for r in deleted_in.collect() if deleted_in is not None else []:
+            pairs[int(r[0])] = max(pairs.get(int(r[0]), 0), art.bound)
+        masked = sorted([p, b] for p, b in pairs.items())
+        mdf = (
+            self.spark.createDataFrame(masked, "mid long, bound long")
+            if masked
+            else None
+        )
+        is_masked = None if mdf is None else (
+            (F.col("id") == mdf["mid"]) & (F.col("_v") < mdf["bound"])
+        )
+        # 3. snapshot guard: a re-indexed live copy sits at or above its
+        # bound and must NOT count as masked, or the invariant would
+        # drift after an accepted upsert
+        snap = art.ids if art.snapshot is None else art.snapshot
+        n_masked_in = (
+            snap.join(mdf, is_masked, "left_semi").count() if mdf is not None else 0
+        )
+        if art.n_expected + n_masked_in != snap.count():
+            raise ValueError(
+                "refresh_index: indexed rows no longer match the visible "
+                "pre-build snapshot (compacted deletes?) — rebuild with "
+                "create_index"
+            )
+        # 4-6. with new rows: refuse live collisions, then append
+        if n_new:
+            live = (
+                art.ids.join(mdf, is_masked, "left_anti")
+                if mdf is not None and art.versioned
+                else art.ids
             )
             if (
-                deleted_in_df is not None
-                and len(masked_pairs) + deleted_in_df.count() > 100_000
-            ):
-                raise ValueError(
-                    "refresh_index: delete mask would exceed 100k pks — "
-                    "compact and rebuild with create_index"
-                )
-            for r in deleted_in_df.collect() if deleted_in_df is not None else []:
-                masked_pairs[int(r[0])] = max(
-                    masked_pairs.get(int(r[0]), 0), new_epoch
-                )
-            masked = sorted([p, b] for p, b in masked_pairs.items())
-            mdf = (
-                self.spark.createDataFrame(masked, "mid long, bound long")
-                if masked
-                else None
-            )
-            n_masked_in = (
-                dl.join(
-                    mdf,
-                    (F.col("id") == mdf["mid"]) & (epoch_col(dl) < mdf["bound"]),
-                    "left_semi",
-                ).count()
-                if mdf is not None
-                else 0
-            )
-            if n_old + n_masked_in != dl.count():
-                raise ValueError(
-                    "refresh_index: indexed docs no longer match the visible "
-                    "pre-build snapshot (compacted deletes?) — rebuild with "
-                    "create_index"
-                )
-            if n_new == 0:
-                if masked:
-                    entry["masked_pks"] = masked
-                entry["built_ts"] = cur
-                self._save_catalog()
-                return entry
-            live = dl
-            if mdf is not None:
-                live = dl.join(
-                    mdf,
-                    (F.col("id") == mdf["mid"]) & (epoch_col(dl) < mdf["bound"]),
-                    "left_anti",
-                )
-            n_collide = (
                 new.select(F.col(pk).cast("long").alias("id"))
                 .join(live.select("id"), "id", "left_semi")
+                .limit(1)
                 .count()
-            )
-            if n_collide:
+            ):
                 raise ValueError(
-                    f"refresh_index: {n_collide} new rows re-use live indexed "
-                    "pks without a delete — rebuild with create_index"
+                    "refresh_index: new rows re-use live indexed pks without "
+                    "a delete — they still have live (unmasked) copies in the "
+                    "index; rebuild with create_index"
                 )
+            masked = art.append(pairs, masked)
+        if masked:
+            entry["masked_pks"] = masked
+        else:  # a fold or compaction may drop EVERY masked copy
+            entry.pop("masked_pks", None)
+        entry["built_ts"] = cur
+        self._save_catalog()
+        return entry
+
+    def _text_copies(
+        self, entry: dict, pk: str, new: DataFrame, n_old: int
+    ) -> _IndexedCopies:
+        """TEXT_MATCH's view for refresh_index: the doclens table holds one
+        row per indexed doc copy; new rows' postings and doclens append as
+        a new epoch (the reference builds the tantivy text index per
+        sealed segment) — base posting files never rewrite."""
+        from milvus_spark.operators.text_index import build_text_postings
+
+        dlpath = os.path.join(entry["path"], "doclens")
+        dl = self.spark.read.parquet(dlpath)
+        new_epoch = int(entry.get("cur_epoch", 0)) + 1
+
+        def append(pairs: dict, masked: list) -> list:
             postings, doclens = build_text_postings(new, entry["field"], pk)
             postings.withColumn(
                 "_epoch", F.lit(new_epoch).cast("long")
@@ -3557,162 +3551,95 @@ class MilvusSparkClient:
                 "append"
             ).parquet(dlpath)
             entry["cur_epoch"] = new_epoch
-            if masked:
-                entry["masked_pks"] = masked
-            entry["built_ts"] = cur
-            self._save_catalog()
-            return entry
-        if itype in (
-            "INVERTED", "BITMAP", "SORT", "STL_SORT", "TRIE", "HYBRID", "RTREE",
-            "NGRAM", "SPARSE_WAND", "SPARSE_INVERTED", "MINHASH_LSH",
-        ):
-            # Scalar index family rides the same epoch/version-mask
-            # lifecycle as the lexical tier (the reference rebuilds scalar
-            # indexes per sealed segment and masks deletes at search):
-            # new rows' postings append as a new epoch — base files never
-            # rewrite — deletes of indexed pks fold into [pk, bound] masks,
-            # upserts accepted iff no live copy remains. Null-valued rows
-            # are unindexed by design, so every count below is over the
-            # NON-NULL slice of the snapshot.
-            from milvus_spark.operators.bitset import epoch_col, normalize_mask
-            from milvus_spark.operators.scalar_index import (
-                assign_sort_bucket,
-                build_bitmap,
-                build_inverted,
-            )
+            return masked
 
-            fld = entry["field"]
-            # HYBRID behaves as whichever layout its build selected
-            eff = entry.get("selected") or itype
-            packed = eff == "BITMAP"
-            art_name = {
-                "INVERTED": "posting", "BITMAP": "posting", "RTREE": "cells",
-                "NGRAM": "posting", "SPARSE_WAND": "posting",
-                "SPARSE_INVERTED": "posting", "MINHASH_LSH": "bands",
-            }.get(eff, "sorted")
-            apath = os.path.join(entry["path"], art_name)
-            c = self.spark.read.parquet(apath)
-            # one row per (doc, epoch-copy): array-valued fields post one
-            # row per distinct element, so dedup to the doc grain before
-            # any count compares against the row-count snapshot
-            ids_df = (
-                c.select(
-                    F.explode("ids").alias("id"), epoch_col(c).alias("_e")
-                )
-                if packed
-                else c.select("id", epoch_col(c).alias("_e"))
-            ).distinct()
-            # the null sidecar's pks participate in delete masking and
-            # live-collision checks (a null-valued doc is indexed too —
-            # just in the nulls list, not the value artifact)
-            ids_all = ids_df
-            if entry.get("nulls"):
-                ndf = self.spark.read.parquet(
-                    os.path.join(entry["path"], "nulls")
-                )
-                ids_all = ids_df.unionByName(
-                    ndf.select("id", epoch_col(ndf).alias("_e")).distinct()
-                )
-            new_epoch = int(entry.get("cur_epoch", 0)) + 1
-            masked_pairs: dict[int, int] = {
-                p: b for p, b in normalize_mask(entry.get("masked_pks"))
-            }
-            deleted_in_df = (
-                ids_all.select(F.col("id").alias("_del_pk"))
-                .join(deleted_df, "_del_pk", "left_semi")
-                .distinct()
-                if deleted_df is not None
-                else None
-            )
-            if (
-                deleted_in_df is not None
-                and len(masked_pairs) + deleted_in_df.count() > 100_000
-            ):
-                raise ValueError(
-                    "refresh_index: delete mask would exceed 100k pks — "
-                    "compact and rebuild with create_index"
-                )
-            for r in deleted_in_df.collect() if deleted_in_df is not None else []:
-                masked_pairs[int(r[0])] = max(
-                    masked_pairs.get(int(r[0]), 0), new_epoch
-                )
-            masked = sorted([p, b] for p, b in masked_pairs.items())
-            mdf = (
-                self.spark.createDataFrame(masked, "mid long, bound long")
-                if masked
-                else None
-            )
-            mcond = None if mdf is None else (
-                (F.col("id") == mdf["mid"]) & (F.col("_e") < mdf["bound"])
-            )
-            n_masked_in = (
-                ids_df.join(mdf, mcond, "left_semi").count()
-                if mdf is not None
-                else 0
-            )
-            from pyspark.sql import types as T
+        return _IndexedCopies(
+            dl.select("id", epoch_col(dl).alias("_v")), n_old, new_epoch, append
+        )
 
-            if eff == "RTREE":
-                # only rows whose WKT parses to a POINT were indexed
-                from milvus_spark.operators.geo import wkt_x, wkt_y
+    def _scalar_copies(
+        self, name: str, entry: dict, itype: str, pk: str,
+        df: DataFrame, new: DataFrame,
+    ) -> _IndexedCopies:
+        """The scalar family's view for refresh_index (the reference
+        rebuilds scalar indexes per sealed segment): new rows' postings
+        append as a new epoch. Rows the build does not index (nulls,
+        unparseable or too-short values) are outside the value artifact,
+        so the snapshot guard counts only the indexable slice; the null
+        sidecar's pks still join the mask and the collision check (a
+        null-valued doc is indexed too — in the nulls list)."""
+        from pyspark.sql import types as T
 
-                indexed_cond = (
-                    wkt_x(F.col(fld)).isNotNull() & wkt_y(F.col(fld)).isNotNull()
-                )
-            elif eff == "NGRAM":
-                # only rows long enough to yield an n-gram were indexed
-                indexed_cond = F.col(fld).isNotNull() & (
-                    F.length(F.col(fld)) >= int(entry.get("n", 3))
-                )
-            elif eff in ("SPARSE_WAND", "SPARSE_INVERTED"):
-                # only rows with >= 1 surviving entry produce postings
-                # (drop_ratio_build slims values below the build threshold)
-                thr = entry.get("drop_threshold")
-                indexed_cond = F.col(fld).isNotNull() & (
-                    F.size(
-                        F.map_filter(F.col(fld), lambda k, v: v > F.lit(float(thr)))
-                    ) > 0
-                    if thr is not None
-                    else F.size(F.col(fld)) > 0
-                )
-            elif eff == "MINHASH_LSH":
-                # every non-empty signature posts exactly `bands` rows
-                indexed_cond = F.col(fld).isNotNull() & (F.size(F.col(fld)) > 0)
-            elif isinstance(df.schema[fld].dataType, T.ArrayType):
-                # array fields index rows with >= 1 non-null element
-                indexed_cond = F.col(fld).isNotNull() & F.exists(
-                    F.col(fld), lambda x: x.isNotNull()
-                )
-            else:
-                indexed_cond = F.col(fld).isNotNull()
-            n_old_nn = df.filter(
-                (F.col(TS_COL) <= entry["built_ts"]) & indexed_cond
-            ).count()
-            if n_old_nn + n_masked_in != ids_df.count():
-                raise ValueError(
-                    "refresh_index: indexed rows no longer match the visible "
-                    "pre-build snapshot (compacted deletes?) — rebuild with "
-                    "create_index"
-                )
-            if n_new == 0:
-                if masked:
-                    entry["masked_pks"] = masked
-                entry["built_ts"] = cur
-                self._save_catalog()
-                return entry
-            live = (
-                ids_all.join(mdf, mcond, "left_anti") if mdf is not None else ids_all
+        from milvus_spark.operators.scalar_index import (
+            assign_sort_bucket,
+            build_bitmap,
+            build_inverted,
+        )
+
+        fld = entry["field"]
+        # HYBRID behaves as whichever layout its build selected
+        eff = entry.get("selected") or itype
+        packed = eff == "BITMAP"
+        art_name = {
+            "INVERTED": "posting", "BITMAP": "posting", "RTREE": "cells",
+            "NGRAM": "posting", "SPARSE_WAND": "posting",
+            "SPARSE_INVERTED": "posting", "MINHASH_LSH": "bands",
+        }.get(eff, "sorted")
+        apath = os.path.join(entry["path"], art_name)
+        c = self.spark.read.parquet(apath)
+        # one row per (doc, epoch-copy): array-valued fields post one
+        # row per distinct element, so dedup to the doc grain before
+        # any count compares against the row-count snapshot
+        ids_df = (
+            c.select(F.explode("ids").alias("id"), epoch_col(c).alias("_v"))
+            if packed
+            else c.select("id", epoch_col(c).alias("_v"))
+        ).distinct()
+        ids_all = ids_df
+        if entry.get("nulls"):
+            ndf = self.spark.read.parquet(os.path.join(entry["path"], "nulls"))
+            ids_all = ids_df.unionByName(
+                ndf.select("id", epoch_col(ndf).alias("_v")).distinct()
             )
-            n_collide = (
-                new.select(F.col(pk).cast("long").alias("id"))
-                .join(live.select("id"), "id", "left_semi")
-                .count()
+        new_epoch = int(entry.get("cur_epoch", 0)) + 1
+        if eff == "RTREE":
+            # only rows whose WKT parses to a POINT were indexed
+            from milvus_spark.operators.geo import wkt_x, wkt_y
+
+            indexed_cond = (
+                wkt_x(F.col(fld)).isNotNull() & wkt_y(F.col(fld)).isNotNull()
             )
-            if n_collide:
-                raise ValueError(
-                    f"refresh_index: {n_collide} new rows re-use live indexed "
-                    "pks without a delete — rebuild with create_index"
-                )
+        elif eff == "NGRAM":
+            # only rows long enough to yield an n-gram were indexed
+            indexed_cond = F.col(fld).isNotNull() & (
+                F.length(F.col(fld)) >= int(entry.get("n", 3))
+            )
+        elif eff in ("SPARSE_WAND", "SPARSE_INVERTED"):
+            # only rows with >= 1 surviving entry produce postings
+            # (drop_ratio_build slims values below the build threshold)
+            thr = entry.get("drop_threshold")
+            indexed_cond = F.col(fld).isNotNull() & (
+                F.size(
+                    F.map_filter(F.col(fld), lambda k, v: v > F.lit(float(thr)))
+                ) > 0
+                if thr is not None
+                else F.size(F.col(fld)) > 0
+            )
+        elif eff == "MINHASH_LSH":
+            # every non-empty signature posts exactly `bands` rows
+            indexed_cond = F.col(fld).isNotNull() & (F.size(F.col(fld)) > 0)
+        elif isinstance(df.schema[fld].dataType, T.ArrayType):
+            # array fields index rows with >= 1 non-null element
+            indexed_cond = F.col(fld).isNotNull() & F.exists(
+                F.col(fld), lambda x: x.isNotNull()
+            )
+        else:
+            indexed_cond = F.col(fld).isNotNull()
+        n_old_nn = df.filter(
+            (F.col(TS_COL) <= entry["built_ts"]) & indexed_cond
+        ).count()
+
+        def append(pairs: dict, masked: list) -> list:
             if eff == "RTREE":
                 from milvus_spark.operators.geo import build_rtree
 
@@ -3800,149 +3727,48 @@ class MilvusSparkClient:
                     epoch=new_epoch, mode="append", src=new,
                 )
             entry["cur_epoch"] = new_epoch
-            if masked:
-                entry["masked_pks"] = masked
-            entry["built_ts"] = cur
-            self._save_catalog()
-            return entry
-        if itype not in ("HNSW", "HNSW_SQ", "HNSW_PQ", "HNSW_PRQ"):
-            # Trained-artifact family: the training (centroids / codebooks /
-            # SQ bounds / hyperplanes) is KEPT — the reference also encodes
-            # new segments with the existing training; drift is accepted
-            # until a full rebuild — and the delta is encoded/assigned and
-            # APPENDED into the layout, so probe math and pruning are
-            # unchanged. (SQ8 clips out-of-range values into the trained
-            # bounds; the shortlist ranking degrades gracefully and the
-            # exact refine still scores true vectors.)
-            import numpy as np
+            return masked
 
-            from milvus_spark.operators.ivf import assign_clusters, l2_normalize
+        return _IndexedCopies(
+            ids_all, n_old_nn, new_epoch, append, snapshot=ids_df
+        )
 
-            from milvus_spark.operators.bitset import epoch_col, normalize_mask
+    def _trained_copies(
+        self, meta: dict, entry: dict, itype: str, field: str,
+        new: DataFrame, n_old: int,
+    ) -> _IndexedCopies:
+        """The trained family's view for refresh_index: the training
+        (centroids / codebooks / SQ bounds / hyperplanes / rotation) is
+        KEPT — the reference also encodes new segments with the existing
+        training; drift is accepted until a full rebuild — and the delta
+        is encoded/assigned and APPENDED into the layout, so probe math
+        and pruning are unchanged. (SQ8 clips out-of-range values into the
+        trained bounds; the shortlist ranking degrades gracefully and the
+        exact refine still scores true vectors.)
 
-            artifact = "clustered" if itype in (
-                "IVF_FLAT", "DISKANN", "SCANN", "BIN_IVF_FLAT"
-            ) else (
-                "bucketed" if itype == "LSH" else "codes"
-            )  # IVF_RABITQ's codes are hive-partitioned by cluster_id
-            apath = os.path.join(entry["path"], artifact)
-            c = self.spark.read.parquet(apath)
-            # rows carry _epoch since r7 (create_index stamps 0; each
-            # refresh appends the next epoch), enabling PER-EPOCH VERSION
-            # MASKS for upserts — [pk, bound] masks only rows with
-            # _epoch < bound, so the re-appended copy keeps serving
-            # (operators/bitset.py). A pre-r7 artifact has no _epoch
-            # column: appending one mid-artifact would fork the parquet
-            # schema, so legacy artifacts keep flat masks and REFUSE
-            # upserts (the old stale-fallback contract) until a
-            # create_index rebuild.
-            epochal = "_epoch" in c.columns
-            new_epoch = int(entry.get("cur_epoch", 0)) + 1
-            masked_pairs: dict[int, int] = {
-                p: b for p, b in normalize_mask(entry.get("masked_pks"))
-            }
-            deleted_in_df = (
-                c.select(F.col(pk).cast("long").alias("_del_pk"))
-                .join(deleted_df, "_del_pk", "left_semi")
-                .distinct()
-                if deleted_df is not None
-                else None
-            )
-            # cap BEFORE collecting: a delete-heavy corpus must not
-            # materialize an unbounded pk list on the driver just to learn
-            # the mask is oversized
-            if (
-                deleted_in_df is not None
-                and len(masked_pairs) + deleted_in_df.count() > 100_000
-            ):
-                raise ValueError(
-                    "refresh_index: delete mask would exceed 100k pks — "
-                    "compact and rebuild with create_index"
-                )
-            deleted_in = (
-                [int(r[0]) for r in deleted_in_df.collect()]
-                if deleted_in_df is not None
-                else []
-            )
-            for p in deleted_in:
-                # every existing copy lives below new_epoch; for legacy
-                # artifacts normalize_mask maps flat ints to "every epoch"
-                masked_pairs[p] = max(
-                    masked_pairs.get(p, 0), new_epoch if epochal else 1 << 62
-                )
-            if len(masked_pairs) > 100_000:
-                raise ValueError(
-                    "refresh_index: delete mask would exceed 100k pks — "
-                    "compact and rebuild with create_index"
-                )
-            masked = sorted([p, b] for p, b in masked_pairs.items())
-            mdf = (
-                self.spark.createDataFrame(masked, "mid long, bound long")
-                if masked
-                else None
-            )
-            # folded-delete guard: every artifact row is either a visible
-            # pre-refresh row (n_old) or a bound-masked stale copy — an
-            # upserted pk's re-appended copy sits at _epoch >= bound and
-            # must NOT count as masked
-            n_masked_in = (
-                c.join(
-                    mdf,
-                    (F.col(pk) == mdf["mid"]) & (epoch_col(c) < mdf["bound"]),
-                    "left_semi",
-                ).count()
-                if mdf is not None
-                else 0
-            )
-            if n_old + n_masked_in != c.count():
-                raise ValueError(
-                    "refresh_index: indexed rows no longer match the visible "
-                    "pre-build snapshot (compacted deletes?) — rebuild with "
-                    "create_index"
-                )
-            if n_new == 0:
-                if masked:
-                    entry["masked_pks"] = masked
-                entry["built_ts"] = cur
-                self._save_catalog()
-                return entry
-            # upsert acceptance (epochal artifacts only): a new row re-using
-            # an indexed pk is fine IFF the pk has NO LIVE copy left in the
-            # artifact — every prior copy sits below its mask bound (r8,
-            # the r7 advisor's fix: a pk whose delete was folded in an
-            # EARLIER refresh has bound < new_epoch but is just as fully
-            # masked; requiring bound >= new_epoch refused it spuriously).
-            # Legacy artifacts (no _epoch column) refuse every collision:
-            # their flat masks hide the pk in ALL epochs, including the
-            # copy this refresh would append.
-            coll = (
-                new.select(F.col(pk).cast("long").alias("_npk"))
-                .join(
-                    (
-                        c.join(
-                            mdf,
-                            (F.col(pk) == mdf["mid"])
-                            & (epoch_col(c) < mdf["bound"]),
-                            "left_anti",
-                        )
-                        if epochal and mdf is not None
-                        else c
-                    ).select(F.col(pk).cast("long").alias("_npk")),
-                    "_npk",
-                    "left_semi",
-                )
-            )
-            if coll.limit(1).count():
-                raise ValueError(
-                    "refresh_index: new rows re-use indexed pks that still "
-                    "have live (unmasked) copies in the artifact — rebuild "
-                    "with create_index"
-                )
-            corpus = (
-                l2_normalize(new, field)
-                if meta.get("metric", "COSINE") == "COSINE"
-                else new.withColumn(field, F.col(field).cast("array<double>"))
-            )
+        Rows carry ``_epoch`` since r7 (create_index stamps 0; each
+        refresh appends the next epoch). A pre-r7 artifact has no
+        ``_epoch`` column: appending one mid-artifact would fork the
+        parquet schema, so its masks hide a pk in every epoch —
+        including the copy a refresh would append — and every re-used pk
+        is refused until a create_index rebuild."""
+        import numpy as np
+
+        from milvus_spark.operators.ivf import assign_clusters
+
+        pk = meta["pk"]
+        artifact = "clustered" if itype in (
+            "IVF_FLAT", "DISKANN", "SCANN", "BIN_IVF_FLAT"
+        ) else (
+            "bucketed" if itype == "LSH" else "codes"
+        )  # IVF_RABITQ's codes are hive-partitioned by cluster_id
+        apath = os.path.join(entry["path"], artifact)
+        c = self.spark.read.parquet(apath)
+        epochal = "_epoch" in c.columns
+        new_epoch = int(entry.get("cur_epoch", 0)) + 1
+
+        def append(pairs: dict, masked: list) -> list:
+            corpus = self._vector_corpus(meta, new, field)
             if epochal:
                 corpus = corpus.withColumn(
                     "_epoch", F.lit(new_epoch).cast("long")
@@ -4061,20 +3887,38 @@ class MilvusSparkClient:
             )
             if (
                 epochal
-                and masked_pairs
+                and pairs
                 and new_epoch > self.MAX_INDEX_EPOCHS
                 and fold_col is not None
             ):
-                masked = self._fold_trained_masks(
-                    apath, fold_col, pk, masked_pairs
-                )
-            if masked:
-                entry["masked_pks"] = masked
-            else:
-                entry.pop("masked_pks", None)
-            entry["built_ts"] = cur
-            self._save_catalog()
-            return entry
+                masked = self._fold_trained_masks(apath, fold_col, pk, pairs)
+            return masked
+
+        return _IndexedCopies(
+            c.select(F.col(pk).cast("long").alias("id"), epoch_col(c).alias("_v")),
+            n_old,
+            new_epoch if epochal else _EVERY_EPOCH,
+            append,
+            versioned=epochal,
+        )
+
+    def _graph_copies(
+        self, meta: dict, entry: dict, itype: str, field: str,
+        new: DataFrame, n_new: int, n_old: int,
+    ) -> _IndexedCopies:
+        """The graph family's view for refresh_index: new rows become a
+        NEW epoch of pk-buckets, each with its own self-contained graph
+        (the reference's flush → buildIndex per new segment). Copies are
+        versioned by bucket (``part``): a mask bound of the current bucket
+        count hides every copy built so far, and legacy plain-int mask
+        entries (pre-r7 catalogs) read as exactly that."""
+        from milvus_spark.operators.hnsw import (
+            SEGMENT_ROWS_DEFAULT,
+            build_hnsw,
+            max_sq_norm,
+        )
+
+        pk = meta["pk"]
         graph_path = os.path.join(entry["path"], "graph")
         self._migrate_flat_graph(graph_path)
         g = self._read_graph(graph_path)
@@ -4082,166 +3926,57 @@ class MilvusSparkClient:
             {"base": 0, "n": int(entry.get("n_partitions", 8))}
         ]
         base = max(e["base"] + e["n"] for e in epochs)
-        # HNSW delete masks are PER-EPOCH VERSION pairs [pk, bound]: the pk
-        # is masked only in buckets with part < bound, so an upserted row's
-        # re-indexed copy (in a later epoch, part >= bound) stays visible —
-        # the reference's delete-bitset-plus-new-segment semantics. Legacy
-        # flat-int masks (pre-r7 catalogs) mean "masked everywhere built so
-        # far": bound = the current bucket count.
-        masked_pairs: dict[int, int] = {}
-        for e in entry.get("masked_pks") or []:
-            p, b = (int(e[0]), int(e[1])) if isinstance(e, (list, tuple)) else (
-                int(e), base
-            )
-            masked_pairs[p] = max(masked_pairs.get(p, 0), b)
-        # fold this round's tombstones: only pks with copies IN the graph
-        # (see the shared note above) — every existing copy lives in a
-        # part < base, so bound = base masks them all. Cap BEFORE
-        # collecting so a delete-heavy corpus never materializes an
-        # unbounded pk list on the driver.
-        if deleted_df is not None:
-            del_in_g = (
-                g.select(F.col("id").alias("_del_pk"))
-                .join(deleted_df, "_del_pk", "left_semi")
-                .distinct()
-            )
-            if len(masked_pairs) + del_in_g.count() > 100_000:
-                raise ValueError(
-                    "refresh_index: delete mask would exceed 100k pks — "
-                    "compact and rebuild with create_index"
-                )
-            for r in del_in_g.collect():
-                masked_pairs[int(r[0])] = base
-        if len(masked_pairs) > 100_000:
-            raise ValueError(
-                "refresh_index: delete mask would exceed 100k pks — compact "
-                "and rebuild with create_index"
-            )
-        masked = sorted([p, b] for p, b in masked_pairs.items())
-        mdf = (
-            self.spark.createDataFrame(masked, "mid long, bound long")
-            if masked
-            else None
-        )
-        # folded-delete guard: compaction erases tombstones, so also require
-        # that every indexed row is still visible or bound-masked (a pk's
-        # re-indexed live copy sits at part >= bound and must NOT count as
-        # masked, or the invariant would drift after an accepted upsert)
-        n_masked_in = (
-            g.join(
-                mdf, (g["id"] == mdf["mid"]) & (g["part"] < mdf["bound"]),
-                "left_semi",
-            ).count()
-            if mdf is not None
-            else 0
-        )
-        if n_old + n_masked_in != g.count():
-            raise ValueError(
-                "refresh_index: indexed rows no longer match the visible "
-                "pre-build snapshot (compacted deletes?) — rebuild with "
-                "create_index"
-            )
-        if n_new == 0:
-            if masked:
-                entry["masked_pks"] = masked
-            entry["built_ts"] = cur
-            self._save_catalog()
-            return entry
-        # upsert acceptance (r7; predicate fixed r8 per the advisor): a new
-        # row re-using an indexed pk is fine IFF the pk has NO LIVE copy
-        # left in the graph — every prior copy sits in a part below its
-        # mask bound. The old test (bound >= base) spuriously refused a pk
-        # whose delete was folded in an EARLIER refresh (bound = that
-        # round's base < today's) even though all its copies were already
-        # fully masked. A duplicate insert without a delete still refuses:
-        # its copies are live, and two live versions of one pk are
-        # indistinguishable at search time.
-        live = (
-            g.join(
-                mdf, (g["id"] == mdf["mid"]) & (g["part"] < mdf["bound"]),
-                "left_anti",
-            )
-            if mdf is not None
-            else g
-        )
-        coll = (
-            new.select(F.col(pk).cast("long").alias("_cid"))
-            .join(live.select(F.col("id").alias("_cid")), "_cid", "left_semi")
-        )
-        if coll.limit(1).count():
-            raise ValueError(
-                "refresh_index: new rows re-use indexed pks that still have "
-                "live (unmasked) copies in the graph — rebuild with "
-                "create_index"
-            )
-        from milvus_spark.operators.hnsw import (
-            SEGMENT_ROWS_DEFAULT,
-            build_hnsw,
-        )
-        from milvus_spark.operators.ivf import l2_normalize
 
-        met = meta.get("metric", "COSINE")
-        if met == "COSINE":
-            corpus = l2_normalize(new, field)
-        elif met == "IP":
-            # MIPS augmentation must reuse the BUILD-time M: a new vector
-            # whose norm exceeds it cannot be embedded exactly
-            v = F.col(field).cast("array<double>")
-            n2 = F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
+        def append(pairs: dict, masked: list) -> list:
             m2 = float(entry.get("mips_m2", 0.0))
-            new_max = float(new.select(F.max(n2).alias("m")).first()["m"] or 0.0)
-            if new_max > m2:
+            if meta.get("metric", "COSINE") == "IP" and max_sq_norm(new, field) > m2:
+                # the augmentation must reuse the BUILD-time M: a new
+                # vector whose norm exceeds it cannot be embedded exactly
                 raise ValueError(
                     "refresh_index: a new vector's norm exceeds the build-time "
                     "MIPS bound M — rebuild with create_index"
                 )
-            corpus = new.withColumn(
-                field,
-                F.concat(v, F.array(F.sqrt(F.greatest(F.lit(m2) - n2, F.lit(0.0))))),
-            )
-        else:
-            corpus = new.withColumn(field, F.col(field).cast("array<double>"))
-        if itype != "HNSW":
-            # quantized graph family: new rows store QUANTIZED-DOMAIN
-            # vectors under the base build's trained quantizer (bounds /
-            # codebooks are kept — the trained-artifact contract)
-            from milvus_spark.operators.quantizers import quantize_frame
+            corpus = self._vector_corpus(meta, new, field, m2)
+            if itype != "HNSW":
+                # quantized graph family: new rows store QUANTIZED-DOMAIN
+                # vectors under the base build's trained quantizer (bounds /
+                # codebooks are kept — the trained-artifact contract)
+                from milvus_spark.operators.quantizers import quantize_frame
 
-            with open(os.path.join(entry["path"], "quantizer.json")) as f:
-                qspec_r = json.load(f)["quantizer"]
-            corpus = quantize_frame(corpus.select(pk, field), field, qspec_r)
-        rows_per = max(1, n_old // max(1, sum(e["n"] for e in epochs)))
-        seg_rows = int(
-            (entry.get("params") or {}).get("segment_rows", SEGMENT_ROWS_DEFAULT)
-        )
-        # epoch bucket count: proportional to the existing layout's
-        # rows-per-bucket, but never letting one bucket exceed the seal
-        # size (the same cap create_index derives its count from)
-        k = max(1, min(64, -(-n_new // rows_per)), -(-n_new // seg_rows))
-        gp = entry.get("graph_params") or (entry.get("params") or {})
-        g_new = build_hnsw(
-            corpus.select(pk, field),
-            field,
-            pk,
-            n_partitions=k,
-            m=int(gp.get("M", 8)),
-            ef_construction=int(gp.get("efConstruction", 64)),
-            part_offset=base,
-        )
-        g_new.write.mode("append").partitionBy("part").parquet(graph_path)
-        epochs = epochs + [{"base": base, "n": k}]
-        if len(epochs) > self.MAX_INDEX_EPOCHS:
-            epochs, masked = self._compact_epochs(
-                entry, graph_path, epochs, masked_pairs, gp, rows_per, seg_rows
+                with open(os.path.join(entry["path"], "quantizer.json")) as f:
+                    qspec_r = json.load(f)["quantizer"]
+                corpus = quantize_frame(corpus.select(pk, field), field, qspec_r)
+            rows_per = max(1, n_old // max(1, sum(e["n"] for e in epochs)))
+            seg_rows = int(
+                (entry.get("params") or {}).get("segment_rows", SEGMENT_ROWS_DEFAULT)
             )
-        entry["epochs"] = epochs
-        if masked:
-            entry["masked_pks"] = masked
-        else:  # compaction may fold EVERY masked copy away
-            entry.pop("masked_pks", None)
-        entry["built_ts"] = cur
-        self._save_catalog()
-        return entry
+            # epoch bucket count: proportional to the existing layout's
+            # rows-per-bucket, but never letting one bucket exceed the seal
+            # size (the same cap create_index derives its count from)
+            k = max(1, min(64, -(-n_new // rows_per)), -(-n_new // seg_rows))
+            gp = entry.get("graph_params") or (entry.get("params") or {})
+            g_new = build_hnsw(
+                corpus.select(pk, field),
+                field,
+                pk,
+                n_partitions=k,
+                m=int(gp.get("M", 8)),
+                ef_construction=int(gp.get("efConstruction", 64)),
+                part_offset=base,
+            )
+            g_new.write.mode("append").partitionBy("part").parquet(graph_path)
+            new_epochs = epochs + [{"base": base, "n": k}]
+            if len(new_epochs) > self.MAX_INDEX_EPOCHS:
+                new_epochs, masked = self._compact_epochs(
+                    entry, graph_path, new_epochs, pairs, gp, rows_per, seg_rows
+                )
+            entry["epochs"] = new_epochs
+            return masked
+
+        return _IndexedCopies(
+            g.select("id", F.col("part").alias("_v")), n_old, base, append,
+            flat_bound=base,
+        )
 
     # code-table shard count (PQ/SQ8, r8): a fold-granularity knob only —
     # searches scan all shards; mask folds rewrite affected shards only
@@ -4431,8 +4166,6 @@ class MilvusSparkClient:
         mask-sized IO job, not a corpus rewrite (mix_compactor.go rewrites
         only the segments it merges). Returns the surviving mask (empty:
         every masked copy is physically gone)."""
-        from milvus_spark.operators.bitset import epoch_col
-
         c = self.spark.read.parquet(apath)
         mdf = self.spark.createDataFrame(
             sorted([p, b] for p, b in masked_pairs.items()),

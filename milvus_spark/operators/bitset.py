@@ -23,15 +23,16 @@ from pyspark.sql import functions as F
 _EVERY_EPOCH = 1 << 62
 
 
-def normalize_mask(excluded) -> list:
+def normalize_mask(excluded, flat_bound: int = _EVERY_EPOCH) -> list:
     """[pk, bound] pairs with one entry per pk (max bound wins); plain
-    ints become [pk, _EVERY_EPOCH]."""
+    ints become [pk, flat_bound]. A graph artifact versions copies by
+    bucket rather than epoch and passes its current bucket count."""
     pairs: dict[int, int] = {}
     for e in excluded or []:
         pk, b = (
             (int(e[0]), int(e[1]))
             if isinstance(e, (list, tuple))
-            else (int(e), _EVERY_EPOCH)
+            else (int(e), flat_bound)
         )
         pairs[pk] = max(pairs.get(pk, 0), b)
     return sorted([p, b] for p, b in pairs.items())

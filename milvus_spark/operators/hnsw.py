@@ -38,6 +38,29 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
+def _sq_norm(v):
+    return F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
+
+
+def max_sq_norm(df: DataFrame, vec_col: str) -> float:
+    """M² for the MIPS reduction: the largest squared norm in the column."""
+    v = F.col(vec_col).cast("array<double>")
+    return float(df.select(F.max(_sq_norm(v)).alias("m2")).first()["m2"] or 0.0)
+
+
+def mips_augment(df: DataFrame, vec_col: str, m2: float) -> DataFrame:
+    """MIPS → L2 reduction (Bachrach et al., RecSys'14): append
+    sqrt(M² − ‖x‖²) to each vector, where M² bounds every squared norm
+    (``max_sq_norm``). Queries append 0, so ‖x̂ − q̂‖² = M² + ‖q‖² − 2⟨x,q⟩
+    and L2 beam search over the augmented graph ranks exactly by inner
+    product; the score is recovered as (M² + ‖q‖² − sqdist)/2."""
+    v = F.col(vec_col).cast("array<double>")
+    return df.withColumn(
+        vec_col,
+        F.concat(v, F.array(F.sqrt(F.greatest(F.lit(m2) - _sq_norm(v), F.lit(0.0))))),
+    )
+
+
 def _beam_search(
     X: np.ndarray,
     adj: list,

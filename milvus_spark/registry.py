@@ -52,7 +52,8 @@ def _gc_scratch(max_age_hours: float = 6.0, max_entries: int = 48) -> None:
     import shutil
     import time
 
-    root = "/root/repo/_scratch"
+    from milvus_spark.scratch import SCRATCH as root
+
     if not os.path.isdir(root):
         return
     now = time.time()

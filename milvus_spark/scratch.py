@@ -16,7 +16,10 @@ import os
 import shutil
 import tempfile
 
-SCRATCH = "/root/repo/_scratch"
+from milvus_spark.session import PACKAGE_ROOT
+
+# beside the package, wherever the checkout lives
+SCRATCH = os.path.join(PACKAGE_ROOT, "_scratch")
 
 
 def _token() -> str:

@@ -326,7 +326,6 @@ def vec_ivf_filtered(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     norm = l2_normalize(emb, "embedding")
     cents = build_centroids(norm, "embedding", k=16, seed=42, max_iter=8)
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
     path = scratch_mkdtemp("ivff_")
     shutil.rmtree(path)
     write_clustered(norm, "embedding", cents, path)
@@ -367,16 +366,13 @@ def vec_hnsw_ip(spark: SparkSession, sf: str) -> DataFrame:
     the brute-force MIPS oracle; scores recovered as (M² + ‖q‖² − d)/2."""
     import numpy as np
 
-    from milvus_spark.operators.hnsw import build_hnsw, hnsw_search
+    from milvus_spark.operators.hnsw import (
+        build_hnsw, hnsw_search, max_sq_norm, mips_augment,
+    )
 
     emb = load_table(spark, sf, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    n2 = F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x)
-    m2 = float(emb.select(F.max(n2).alias("m2")).first()["m2"])
-    aug = emb.withColumn(
-        "embedding",
-        F.concat(v, F.array(F.sqrt(F.greatest(F.lit(m2) - n2, F.lit(0.0))))),
-    )
+    m2 = max_sq_norm(emb, "embedding")
+    aug = mips_augment(emb, "embedding", m2)
     idx = build_hnsw(aug, "embedding", "vec_id", n_partitions=8, m=8)
     qrows = emb.filter(F.col("vec_id") < NQ).orderBy("vec_id").collect()
     queries = [list(map(float, r.embedding)) + [0.0] for r in qrows]

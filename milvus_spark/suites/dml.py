@@ -15,7 +15,6 @@ MvccNode.cpp:56 / mix_compactor.go (see operators/lifecycle.py docstrings).
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -27,7 +26,6 @@ from milvus_spark.registry import register
 from milvus_spark.scratch import mkdtemp as scratch_mkdtemp
 from milvus_spark.session import load_table
 
-_SCRATCH = "/root/repo/_scratch"
 
 # effective price / ts after the ts=2 upsert, as SQL fragments
 _EFF_PRICE = "CASE WHEN o_orderkey % 100 = 0 THEN o_totalprice + 100000 ELSE o_totalprice END"
@@ -37,7 +35,6 @@ _DELETED_T4 = "(o_orderkey % 997 = 0)"
 
 
 def _build_collection(spark: SparkSession, sf: str, upto_ts: int = 4) -> Collection:
-    os.makedirs(_SCRATCH, exist_ok=True)
     path = scratch_mkdtemp("coll_")
     shutil.rmtree(path)
     coll = Collection(spark, path, pk="o_orderkey")
@@ -234,7 +231,6 @@ def dml_partition_key_prune(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_plans.py::test_partition_key_filter_prunes_directories.
     At 100 TB this is the difference between listing every segment and
     touching only the target shard."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     path = scratch_mkdtemp("pkmode_")
     shutil.rmtree(path)
     coll = Collection(spark, path, pk="o_orderkey", partition_key="o_orderpriority")
@@ -286,7 +282,6 @@ def dml_array_field_ops(spark: SparkSession, sf: str) -> DataFrame:
     everything else. Timeline: insert tags=[k%5,k%7,k%5,k%11]; append
     [k%3,k%5] where k%10=0; remove [k%5] where k%20=0. The oracle replays
     the same list algebra."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     path = scratch_mkdtemp("arrops_")
     shutil.rmtree(path)
     coll = Collection(spark, path, pk="o_orderkey")
@@ -332,7 +327,6 @@ def dml_namespace_isolation(spark: SparkSession, sf: str) -> DataFrame:
     as the physical partition key, so each tenant read directory-prunes."""
     from milvus_spark.client import MilvusSparkClient
 
-    os.makedirs(_SCRATCH, exist_ok=True)
     client = MilvusSparkClient(spark, root=scratch_mkdtemp("nsq_"))
     c = load_table(spark, sf, "customer").select("c_custkey", "c_acctbal")
     client.create_collection("cust", "c_custkey", enable_namespace=True)

@@ -534,7 +534,6 @@ def rel_json_flat_index(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
     root = scratch_mkdtemp("jsonflat_")
     shutil.rmtree(root)
     e = load_table(spark, sf, "events")

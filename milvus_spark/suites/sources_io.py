@@ -27,7 +27,6 @@ from milvus_spark.session import load_table
 # row times the manifest-driven READ path
 _PACKED_MEMO: dict = {}
 
-_SCRATCH = "/root/repo/_scratch"
 
 _SCHEMA = T.StructType(
     [
@@ -55,7 +54,6 @@ def src_bulk_import(spark: SparkSession, sf: str) -> DataFrame:
     row handling anywhere."""
     from milvus_spark.sources.bulk_import import read_csv, read_json
 
-    os.makedirs(_SCRATCH, exist_ok=True)
     base = scratch_mkdtemp("imp_")
     o = load_table(spark, sf, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus",
@@ -163,7 +161,6 @@ def src_external_table(spark: SparkSession, sf: str) -> DataFrame:
     the files."""
     from milvus_spark.client import MilvusSparkClient
 
-    os.makedirs(_SCRATCH, exist_ok=True)
     client = MilvusSparkClient(spark, root=scratch_mkdtemp("ext_"))
     client.create_external_collection(
         "li", os.path.join(sf, "lineitem.parquet"), pk_field="l_orderkey"

@@ -26,11 +26,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from milvus_spark.registry import register
-from milvus_spark.scratch import mkdtemp as scratch_mkdtemp
+from milvus_spark.scratch import SCRATCH, mkdtemp as scratch_mkdtemp
 from milvus_spark.session import load_table, state_sized_shuffle
 from milvus_spark.streaming.stateful import materialize_wal, read_final_state
 
-_SCRATCH = "/root/repo/_scratch"
 
 
 def _stage_time_ordered(stage: str, em: DataFrame, sentinel_frames: list) -> str:
@@ -107,7 +106,6 @@ def _write_wal(spark: SparkSession, sf: str, root: str) -> str:
 
 def run_wal_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """Build WAL → stateful stream → final-state DataFrame (pk, price)."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     root = scratch_mkdtemp("stateful_")
     shutil.rmtree(root)
     os.makedirs(root)
@@ -160,14 +158,13 @@ def stream_window_agg(spark: SparkSession, sf: str) -> DataFrame:
     day-window so the state store finalizes and EMITS them exactly once.
     The sentinel window never finalizes and is filtered by event_type. The emitted set must hash-match the batch SQL
     oracle (Structured Streaming's batch-equivalence contract)."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     root = scratch_mkdtemp("streamwin_")
     # staged WAL is immutable per SF — stage once, reuse across calls
     # (checkpoint + sink stay fresh per run). The batch frame and the
     # sentinel plans are built ONLY when staging actually runs: their
     # analysis alone costs ~0.5s/call, pure overhead on a memoized-WAL
     # re-run (the r11 stream_session_agg profile decomposition)
-    stage = os.path.join(_SCRATCH, "streamwin_store", os.path.basename(sf.rstrip("/")))
+    stage = os.path.join(SCRATCH, "streamwin_store", os.path.basename(sf.rstrip("/")))
     src = os.path.join(stage, "src")
     if not os.path.exists(os.path.join(stage, "_STAGED_V3")):
         e = load_table(spark, sf, "events").select("ts", "event_type", "value")
@@ -248,7 +245,6 @@ def stream_session_agg(spark: SparkSession, sf: str) -> DataFrame:
     its gap can no longer be extended). The sentinel session itself never
     finalizes and is filtered by user_id. The
     emitted set must hash-match the batch gaps-and-islands oracle."""
-    os.makedirs(_SCRATCH, exist_ok=True)
     root = scratch_mkdtemp("streamsess_")
     # the staged WAL (time-ordered chunks + sentinels) is immutable per SF —
     # stage it once and reuse across calls; only the checkpoint + memory
@@ -257,7 +253,7 @@ def stream_session_agg(spark: SparkSession, sf: str) -> DataFrame:
     # ONLY when staging runs: their analysis costs ~0.5s/call (measured
     # r11: load_table 0.14s + sentinel plan 0.40s), pure overhead on a
     # memoized-WAL re-run of a ~2.2s query
-    stage = os.path.join(_SCRATCH, "streamsess_store", os.path.basename(sf.rstrip("/")))
+    stage = os.path.join(SCRATCH, "streamsess_store", os.path.basename(sf.rstrip("/")))
     src = os.path.join(stage, "src")
     if not os.path.exists(os.path.join(stage, "_STAGED_V3")):
         e = load_table(spark, sf, "events").select("ts", "user_id")
@@ -346,7 +342,6 @@ def stream_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     from milvus_spark.operators.text import shingles, tokens, minhash_signature
     from milvus_spark.suites.text import _BANDS, _H
 
-    os.makedirs(_SCRATCH, exist_ok=True)
     root = scratch_mkdtemp("streamdedup_")
     d = load_table(spark, sf, "documents").select("doc_id", "text")
 
@@ -389,7 +384,7 @@ def stream_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
     cmembers.count()
 
     # stage the arriving docs as two parquet chunks → two micro-batches
-    stage = os.path.join(_SCRATCH, "streamdedup_store", os.path.basename(sf.rstrip("/")))
+    stage = os.path.join(SCRATCH, "streamdedup_store", os.path.basename(sf.rstrip("/")))
     src = os.path.join(stage, "src")
     if not os.path.exists(os.path.join(stage, "_STAGED")):
         new_docs = d.filter(F.col("doc_id") % 5 == 0)
@@ -463,7 +458,7 @@ def stream_exact_dedup(spark: SparkSession, sf: str) -> DataFrame:
     older than the watermark are already persisted corpus, not state)."""
     d = load_table(spark, sf, "documents").select("doc_id", "text")
 
-    stage = os.path.join(_SCRATCH, "streamexact_store", os.path.basename(sf.rstrip("/")))
+    stage = os.path.join(SCRATCH, "streamexact_store", os.path.basename(sf.rstrip("/")))
     src = os.path.join(stage, "src")
     if not os.path.exists(os.path.join(stage, "_STAGED")):
         half = d.agg(F.percentile_approx("doc_id", 0.5)).first()[0]

@@ -444,7 +444,6 @@ def vec_search_after_dml(spark: SparkSession, sf: str) -> DataFrame:
 
     from milvus_spark.operators.lifecycle import Collection
 
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
     path = scratch_mkdtemp("searchdml_")
     shutil.rmtree(path)
     emb = load_table(spark, sf, "embeddings")

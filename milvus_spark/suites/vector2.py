@@ -25,12 +25,14 @@ final small top-k window.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from milvus_spark.registry import register
-from milvus_spark.scratch import mkdtemp as scratch_mkdtemp
+from milvus_spark.scratch import SCRATCH, mkdtemp as scratch_mkdtemp
 from milvus_spark.session import load_table
 
 NQ = 4
@@ -526,9 +528,6 @@ def vec_ivf_cosine(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     norm = l2_normalize(emb, "embedding")
     cents = build_centroids(norm, "embedding", k=16, seed=42, max_iter=8)
-    import os
-
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
     path = scratch_mkdtemp("ivfq_")
     shutil.rmtree(path)
     write_clustered(norm, "embedding", cents, path)
@@ -1006,7 +1005,7 @@ def vec_hybrid_trimodal(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------- FLOAT16 vector storage: half-bits store, fp32 compute -------------
-_FP16_DIR = "/root/repo/_scratch/fp16_store"
+_FP16_DIR = os.path.join(SCRATCH, "fp16_store")
 
 
 def _fp16_oracle() -> str:
@@ -1038,8 +1037,6 @@ def vec_fp16_ip(spark: SparkSession, sf: str) -> DataFrame:
     fp32 by JVM bit arithmetic at scan time, IP top-k in fp32 — the same
     store-narrow/compute-wide contract knowhere applies to half inputs.
     The oracle decodes the identical bytes with the identical formula."""
-    import os
-
     from milvus_spark.operators.fp16 import encode_fp16, fp16_to_f32
 
     path = os.path.join(_FP16_DIR, os.path.basename(sf.rstrip("/")))
