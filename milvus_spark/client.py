@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 from typing import Any, Callable, NamedTuple, Optional, Sequence
 
 import pandas as pd
@@ -28,7 +27,7 @@ from pyspark.sql import functions as F
 
 from milvus_spark.operators.bitset import _EVERY_EPOCH, epoch_col, normalize_mask
 from milvus_spark.operators.knn import brute_force_search
-from milvus_spark.operators.lifecycle import TS_COL, Collection
+from milvus_spark.operators.lifecycle import TS_COL, Collection, atomic_write_json
 from milvus_spark.plans.expr import apply_filter, compile_expr
 
 # top-k quota applied to every search path (quota_param.go:1445-1450);
@@ -67,25 +66,6 @@ class _IndexedCopies(NamedTuple):
     flat_bound: int = _EVERY_EPOCH  # bound of a legacy plain-int mask entry
     versioned: bool = True  # False: masks hide new copies too; refuse re-use
     snapshot: Optional[DataFrame] = None  # what the guard counts; None = ids
-
-
-def atomic_write_json(path: str, obj, **dump_kw) -> None:
-    """Write JSON so readers see the old file or the new one, never a
-    torn one: dump to a temp file in the same directory, fsync it, then
-    ``os.replace`` it over ``path``."""
-    fd, tmp = tempfile.mkstemp(
-        prefix=os.path.basename(path) + ".", suffix=".tmp",
-        dir=os.path.dirname(path) or ".",
-    )
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(obj, f, **dump_kw)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-    except BaseException:
-        os.unlink(tmp)
-        raise
 
 
 def _validate_warmup(v) -> None:
@@ -2224,7 +2204,16 @@ class MilvusSparkClient:
         only the post-build delta, merged through the top-k window — the
         reference's delegator split (SearchOnSealed.cpp/SearchOnGrowing.cpp)
         — falling back to the full exact scan only when the composition
-        can't be proven safe (see _servable_delta)."""
+        can't be proven safe (see _servable_delta).
+
+        Trained layouts (IVF_FLAT / DISKANN / SCANN, IVF_RABITQ,
+        BIN_IVF_FLAT) train their lists on one bounded sample: the ≤ 256
+        vectors per list with the smallest ``xxhash64(vector, seed)``, cut at
+        ``ivf.SAMPLE_BYTES`` of float64 on the driver and read in one Spark
+        job, then k-means in numpy (``ivf.build_centroids``). STL_SORT /
+        TRIE take their bucket edges from the same kind of sample
+        (``scalar_index.build_sorted``). An empty collection is refused by
+        name."""
         self._priv("CreateIndex", name)
         self._deny_ddl("index")
         params = dict(params or {})
@@ -2521,6 +2510,8 @@ class MilvusSparkClient:
                 seed=int(params.get("seed", 42)),
                 max_iter=int(params.get("max_iter", 8)),
             )
+            if len(cents) == 0:
+                raise ValueError(f"cannot build {itype} on empty collection {name!r}")
             os.makedirs(idx_dir, exist_ok=True)
             # rows carry _epoch (0 = the base build; refresh appends higher
             # epochs) so the delete bitset can version-mask upserted pks —
@@ -2548,7 +2539,7 @@ class MilvusSparkClient:
             # Build: vectors are packed uint8 bytes (the Milvus binary
             # wire format the scoring kernel unpacks); clustering runs in
             # UNPACKED bit space, JVM-side expansion (unpack_bits_expr) +
-            # the shared MLlib KMeans — L2² over {0,1} bits IS Hamming
+            # the shared sampled k-means — L2² over {0,1} bits IS Hamming
             # distance, so L2 cells are Hamming cells and the probe
             # geometry is exact for HAMMING (and the standard IVF recall
             # heuristic for JACCARD). The layout stores the PACKED bytes
@@ -2586,6 +2577,10 @@ class MilvusSparkClient:
                 seed=int(params.get("seed", 42)),
                 max_iter=int(params.get("max_iter", 8)),
             )
+            if len(cents) == 0:
+                raise ValueError(
+                    f"cannot build BIN_IVF_FLAT on empty collection {name!r}"
+                )
             os.makedirs(idx_dir, exist_ok=True)
             (
                 assign_clusters(

@@ -12,9 +12,16 @@ Reference parity (file:line into /root/reference):
     (brute force = SearchBruteForce.cpp, our operators/knn.py).
 
 Spark design:
-  - "Index build" = a KMeans job producing (a) a tiny centroid table and
+  - "Index build" = (a) centroids trained on a bounded driver sample and
     (b) a corpus rewrite partitioned by cluster_id — exactly clustering
-    compaction. Centroids live driver-side/broadcast (k ≤ a few thousand).
+    compaction. The sample is the ≤ SAMPLE_PER_LIST·k rows with the
+    smallest ``xxhash64(vector, seed)``, capped at SAMPLE_BYTES of float64
+    vectors, collected in ONE Spark job (knowhere's faiss trainer caps
+    training at 256 points per list; Milvus's KmeansClustering.cpp samples
+    too). Seeded k-means++ and Lloyd iterations then run in numpy with the
+    same ``_score_block`` L2 that assigns rows, so the centroids depend on
+    the data only, never on how it is partitioned. Centroids live
+    driver-side/broadcast (k ≤ a few thousand).
   - "Index search" = rank centroids per query (driver numpy, nq×k tiny),
     build a (qid, cluster_id) probe list, broadcast-join it against the
     cluster-partitioned corpus — Spark prunes non-probed partitions from the
@@ -37,6 +44,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from milvus_spark.operators.knn import _score_block, metric_ascending
+
+# Training sample per IVF list: knowhere's faiss trainer caps training at
+# 256 points per centroid.
+SAMPLE_PER_LIST = 256
+# Most float64 vector bytes one index build collects to the driver.
+SAMPLE_BYTES = 256 << 20
 
 
 def l2_normalize(df: DataFrame, vec_col: str) -> DataFrame:
@@ -71,50 +84,125 @@ def unpack_bits_expr(col: Column | str) -> Column:
     )
 
 
+def hash_sample(df: DataFrame, cols: Sequence[str], n: int, seed: int) -> DataFrame:
+    """The ``n`` rows with the smallest ``xxhash64(cols, seed)`` (ties broken
+    by ``cols``): a deterministic sample that does not depend on how the
+    data is partitioned. Spark plans it as one TakeOrderedAndProject, so
+    collecting it is one job; its output is one partition in hash order."""
+    h = F.xxhash64(*[F.col(c) for c in cols], F.lit(seed))
+    return df.orderBy(h, *cols).limit(int(n))
+
+
+def _arrow_matrix(col) -> np.ndarray:
+    """(n, d) float64 from an Arrow list array of equal-length rows."""
+    if len(col) == 0:
+        return np.zeros((0, 0), dtype=np.float64)
+    lens = col.value_lengths().to_numpy(zero_copy_only=False)
+    if (lens != lens[0]).any():
+        raise ValueError(
+            f"vectors of different dimensions ({int(lens.min())}..{int(lens.max())}) "
+            "in one field"
+        )
+    return col.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(
+        len(col), int(lens[0])
+    )
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of the L2-nearest centroid per row — assign_clusters' rule,
+    blocked so the (k, rows) distance matrix stays near 32 MB."""
+    step = max(1, (1 << 22) // max(1, len(C)))
+    return np.concatenate(
+        [_score_block(X[i : i + step], C, "L2").argmin(axis=0) for i in range(0, len(X), step)]
+    )
+
+
+def kmeans(X: np.ndarray, k: int, seed: int = 42, max_iter: int = 20) -> np.ndarray:
+    """Seeded k-means++ then Lloyd iterations over a driver-side sample
+    (n × d), stopping when assignments stop changing or at ``max_iter``.
+    Returns min(k, distinct rows) centroids: with no more distinct rows than
+    k, the distinct rows themselves. An empty list keeps its centroid."""
+    X = np.asarray(X, dtype=np.float64)
+    distinct = np.unique(X, axis=0)
+    if len(distinct) <= k:
+        return distinct
+    rng = np.random.default_rng(seed)
+    C = np.empty((k, X.shape[1]), dtype=np.float64)
+    C[0] = X[rng.integers(len(X))]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    for j in range(1, k):
+        # every chosen row has d2 == 0 exactly, so k distinct seeds exist
+        C[j] = X[rng.choice(len(X), p=d2 / d2.sum())]
+        np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1), out=d2)
+    assign = None
+    for _ in range(max_iter):
+        new = _nearest(X, C)
+        if assign is not None and np.array_equal(new, assign):
+            break
+        assign = new
+        counts = np.bincount(assign, minlength=k)
+        sums = np.zeros_like(C)
+        np.add.at(sums, assign, X)
+        full = counts > 0
+        C[full] = sums[full] / counts[full, None]
+    return C
+
+
 def build_centroids(
     df: DataFrame, vec_col: str, k: int, seed: int = 42, max_iter: int = 20
 ) -> np.ndarray:
-    """K-means centroids (k × d) over the corpus vector column (MLlib)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(feat)
-    return np.asarray(model.clusterCenters(), dtype=np.float64)
+    """K-means centroids (≤ k × d) of the vector column, trained on one
+    bounded sample: the ≤ SAMPLE_PER_LIST·k non-null vectors with the
+    smallest ``xxhash64(vector, seed)``, cut at SAMPLE_BYTES of float64
+    values, read in one Spark job. Returns min(k, distinct sampled
+    vectors) rows — zero rows for a column with no vectors, which callers
+    refuse by name."""
+    v = df.select(F.col(vec_col).cast("array<double>").alias("v")).filter(
+        F.col("v").isNotNull()
+    )
+    sample = hash_sample(v, ["v"], SAMPLE_PER_LIST * int(k), seed)
+    # the sample is one partition in hash order, so the id is the row's rank
+    within = (F.monotonically_increasing_id() + 1) * F.size("v") * 8 <= SAMPLE_BYTES
+    X = _arrow_matrix(sample.filter(within).toArrow().column("v").combine_chunks())
+    return kmeans(X, int(k), seed=seed, max_iter=max_iter)
 
 
 def assign_clusters(df: DataFrame, vec_col: str, centroids: np.ndarray) -> DataFrame:
-    """Add cluster_id = argmin L2 distance to centroid (map-side, Arrow batch)."""
+    """Add cluster_id = argmin L2 distance to centroid (map-side, Arrow
+    batch): the vector column is read straight from Arrow into one (n, d)
+    matrix and passed through untouched, with no pandas conversion."""
     C = centroids
 
     def assign(batches):
-        from milvus_spark.operators.knn import _score_block
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            if b.num_rows == 0:
                 continue
-            V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            # O(n·k) matmul distances — the broadcast-subtraction tensor
-            # ((n,k,d)) was O(n·k·d) memory and OOMed builds at large nlist
-            d = _score_block(V, C, "L2")  # (k, n) distances, queries=centroids
-            out = pdf.drop(columns=[vec_col])
-            out["cluster_id"] = d.argmin(axis=0).astype(np.int32)
-            out[vec_col] = pdf[vec_col]
-            yield out
+            vec = b.column(vec_col)
+            cid = _nearest(_arrow_matrix(vec), C).astype(np.int32)
+            names = [n for n in b.schema.names if n != vec_col]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(n) for n in names] + [pa.array(cid), vec],
+                names + ["cluster_id", vec_col],
+            )
 
     fields = [f"{name} {dt}" for name, dt in df.dtypes if name != vec_col]
     vec_dt = dict(df.dtypes)[vec_col]
     schema = ", ".join(fields + ["cluster_id int", f"{vec_col} {vec_dt}"])
-    return df.mapInPandas(assign, schema=schema)
+    return df.mapInArrow(assign, schema=schema)
 
 
 def write_clustered(
     df: DataFrame, vec_col: str, centroids: np.ndarray, path: str
 ) -> None:
-    """Clustering compaction: rewrite the corpus partitioned by cluster_id."""
-    assign_clusters(df, vec_col, centroids).write.mode("overwrite").partitionBy(
-        "cluster_id"
-    ).parquet(path)
+    """Clustering compaction: rewrite the corpus partitioned by cluster_id.
+    The shuffle by cluster_id lets the write run one task per shuffle
+    partition, whatever the input's file count, and leaves one file per
+    list."""
+    assign_clusters(df, vec_col, centroids).repartition("cluster_id").write.mode(
+        "overwrite"
+    ).partitionBy("cluster_id").parquet(path)
 
 
 def ivf_search(

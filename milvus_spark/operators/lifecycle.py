@@ -25,7 +25,9 @@ pruning on pk for free.
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +38,25 @@ DEL_TS_COL = "_del_ts"
 # merged segment schemas memoized per seg_dir, validated by the (path,
 # size, mtime) signature of every segment file — see Collection._read_segments
 _SEGMENT_SCHEMA_MEMO: dict = {}
+
+
+def atomic_write_json(path: str, obj, **dump_kw) -> None:
+    """Write JSON so readers see the old file or the new one, never a
+    torn one: dump to a temp file in the same directory, fsync it, then
+    ``os.replace`` it over ``path``."""
+    fd, tmp = tempfile.mkstemp(
+        prefix=os.path.basename(path) + ".", suffix=".tmp",
+        dir=os.path.dirname(path) or ".",
+    )
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(obj, f, **dump_kw)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 def _iter_parquet_files(root: str):
@@ -224,20 +245,18 @@ class Collection:
         history at or before this moment is no longer reconstructible. The
         watermark (max folded ts) lets changes() fail loudly instead of
         silently omitting pre-compaction deletes."""
-        import json
-
         segs = self.spark.read.option("mergeSchema", "true").parquet(self.seg_dir)
         wm = segs.agg(F.max(TS_COL)).first()[0] or 0
         tombs = self._tombstones()
         if tombs is not None:
             tw = tombs.agg(F.max(DEL_TS_COL)).first()[0] or 0
             wm = max(int(wm), int(tw))
-        with open(os.path.join(self.path, "cdc_watermark.json"), "w") as f:
-            json.dump({"compacted_through_ts": int(wm)}, f)
+        atomic_write_json(
+            os.path.join(self.path, "cdc_watermark.json"),
+            {"compacted_through_ts": int(wm)},
+        )
 
     def _cdc_watermark(self) -> int:
-        import json
-
         p = os.path.join(self.path, "cdc_watermark.json")
         if not os.path.exists(p):
             return 0
@@ -341,8 +360,6 @@ class Collection:
             raise ValueError(f"unknown clustering key {key!r}")
         clustered = live.repartitionByRange(num_partitions, F.col(key)).sortWithinPartitions(key)
         self._swap_segments(clustered, ".clustering")
-        import json
-
         # per-file stats from parquet footers only — no data scan; recursive
         # glob + relative names so hive-partitioned layouts manifest too
         import pyarrow.parquet as pq
@@ -361,8 +378,10 @@ class Collection:
             if mins:
                 stats[os.path.relpath(f, self.seg_dir)] = [min(mins), max(maxs)]
         manifest = {"key": key, "files": stats}
-        with open(os.path.join(self.path, "partition_stats.json"), "w") as f:
-            json.dump(manifest, f, indent=2, default=str)
+        atomic_write_json(
+            os.path.join(self.path, "partition_stats.json"),
+            manifest, indent=2, default=str,
+        )
         return manifest
 
     def read_pruned(self, lo, hi) -> DataFrame:
@@ -377,8 +396,6 @@ class Collection:
         to the exact full scan rather than resurrect/skip rows. The pruned
         path also applies tombstones, exactly like read(): deletes recorded
         AFTER the clustering compaction must stay invisible here too."""
-        import json
-
         mpath = os.path.join(self.path, "partition_stats.json")
         with open(mpath) as f:
             manifest = json.load(f)

@@ -39,18 +39,14 @@ from pyspark.sql import functions as F
 from milvus_spark.operators.knn import _score_block, metric_ascending
 
 
-def _kmeans_np(X: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
-    """Deterministic Lloyd's k-means (numpy) for small training samples."""
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), size=k, replace=False)].copy()
-    for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)
-        for j in range(k):
-            pts = X[a == j]
-            if len(pts):
-                C[j] = pts.mean(axis=0)
-    return C
+def fit_codebook(X: np.ndarray, k: int, seed: int, max_iter: int = 25) -> np.ndarray:
+    """k codewords for one subspace sample: the engine's k-means
+    (ivf.kmeans); a subspace with fewer than k distinct values repeats its
+    last codeword, which encoding never picks over the first copy."""
+    from milvus_spark.operators.ivf import kmeans
+
+    C = kmeans(X, k, seed, max_iter=max_iter)
+    return np.concatenate([C, np.repeat(C[-1:], k - len(C), axis=0)])
 
 
 def train_codebooks(
@@ -78,7 +74,7 @@ def train_codebooks(
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
     return np.stack(
-        [_kmeans_np(X[:, i * dsub : (i + 1) * dsub], k, seed + i) for i in range(m)]
+        [fit_codebook(X[:, i * dsub : (i + 1) * dsub], k, seed + i) for i in range(m)]
     )
 
 

@@ -196,27 +196,14 @@ def train_qspec(
 
 def _fit_pq_np(S: np.ndarray, m: int, k: int, seed: int) -> np.ndarray:
     """Driver-side PQ codebook fit (k-means per subspace) on a bounded
-    sample — the residual layers of PRQ can't reuse the distributed
-    trainer because each layer's input depends on the previous fit."""
-    n, d = S.shape
-    dsub = d // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, k, dsub))
-    for j in range(m):
-        X = S[:, j * dsub : (j + 1) * dsub]
-        idx = rng.choice(n, size=min(k, n), replace=False)
-        C = X[idx].copy()
-        if len(C) < k:  # degenerate tiny sample: pad with jitter
-            C = np.vstack([C, C[rng.integers(0, len(C), k - len(C))] + 1e-9])
-        for _ in range(10):
-            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            for c in range(k):
-                mask = a == c
-                if mask.any():
-                    C[c] = X[mask].mean(axis=0)
-        books[j] = C
-    return books
+    sample — each PRQ residual layer's input depends on the previous fit,
+    so every layer fits from the one collected sample."""
+    from milvus_spark.operators.pq import fit_codebook
+
+    dsub = S.shape[1] // m
+    return np.stack(
+        [fit_codebook(S[:, j * dsub : (j + 1) * dsub], k, seed + j, 10) for j in range(m)]
+    )
 
 
 def quantize_frame(df: DataFrame, vec_col: str, qspec: dict) -> DataFrame:

@@ -29,9 +29,10 @@ create_index and pruned at query time.
 directories at file listing for equality/IN — the driver computes a query
 literal's bucket locally (``py_vbucket``) with zero Spark jobs, exactly
 like text_index.py's ``py_tbucket``. The sorted family instead records
-its range-partition upper BOUNDS in the catalog entry, so a range / prefix
-query lists only the overlapping bucket directories (the zone-map /
-binary-search analog) and pushes the value predicate into row-group stats.
+its bucket upper BOUNDS (quantiles of a bounded sample) in the catalog
+entry, so a range / prefix query lists only the overlapping bucket
+directories (the zone-map / binary-search analog) and pushes the value
+predicate into row-group stats.
 At 100 TB either shape reads O(matching postings), not the column.
 
 Values in the hash-bucketed family are stored as Spark's canonical STRING
@@ -135,9 +136,9 @@ def read_value_postings(index: DataFrame, values: list) -> DataFrame:
 
 
 def assign_sort_bucket(value_col, bounds: list) -> F.Column:
-    """Bucket i covers values <= bounds[i] (last bucket unbounded):
-    the range-partitioner's layout replayed from the catalog entry so
-    refresh appends land in the bucket their value belongs to."""
+    """Bucket i covers values <= bounds[i] (last bucket unbounded): the
+    build's layout replayed from the catalog entry so refresh appends land
+    in the bucket their value belongs to."""
     b = F.lit(0)
     for edge in bounds:
         b = b + F.when(value_col > F.lit(edge), 1).otherwise(0)
@@ -148,30 +149,33 @@ def build_sorted(
     df: DataFrame, field: str, pk: str, n_buckets: int = SORT_BUCKETS
 ) -> tuple[DataFrame, list]:
     """((sbucket, value, id) sorted within buckets, bounds) — the
-    ScalarIndexSort / marisa layout: one range-partitioning pass derives
-    the bucket edges, rows sort within each bucket so parquet row-group
-    stats serve the binary search. ``bounds`` (per-bucket max, last
-    omitted) goes into the catalog entry for dispatch-time directory
-    pruning and refresh-time bucket assignment."""
-    base = (
-        df.filter(F.col(field).isNotNull())
-        .select(F.col(field).alias("value"), F.col(pk).cast("long").alias("id"))
-        .repartitionByRange(n_buckets, "value")
-        .withColumn("sbucket", F.spark_partition_id().cast("int"))
+    ScalarIndexSort / marisa layout. The bucket edges are quantiles of one
+    bounded sample: the ≤ SAMPLE_PER_LIST·n_buckets non-null rows with the
+    smallest ``xxhash64(id, value)``, sorted by Spark (so NaN and string
+    order are Spark's) in the job that collects them. Edges strictly
+    increase; a NaN edge is dropped, because the last bucket is unbounded
+    anyway. The artifact is then written in one pass: rows sort within each
+    bucket so parquet row-group stats serve the binary search. ``bounds``
+    (bucket i holds values ≤ bounds[i], the last bucket the rest) goes
+    into the catalog entry for dispatch-time directory pruning and
+    refresh-time bucket assignment."""
+    from milvus_spark.operators.ivf import SAMPLE_PER_LIST, hash_sample
+
+    rows = df.filter(F.col(field).isNotNull()).select(
+        F.col(field).alias("value"), F.col(pk).cast("long").alias("id")
     )
-    edges = (
-        base.groupBy("sbucket")
-        .agg(F.max("value").alias("mx"))
-        .orderBy("sbucket")
-        .collect()
-    )
-    bounds = [r["mx"] for r in edges[:-1]]
-    # re-derive the bucket from bounds rather than trusting partition ids:
-    # the assignment column is then EXACTLY what refresh appends use, so
-    # bucket membership is stable across build and append
+    sample = hash_sample(rows, ["id", "value"], SAMPLE_PER_LIST * n_buckets, seed=42)
+    vals = [r[0] for r in sample.select("value").sortWithinPartitions("value").collect()]
+    bounds: list = []
+    for i in range(1, n_buckets):
+        j = i * len(vals) // n_buckets - 1
+        if j < 0 or vals[j] != vals[j] or (bounds and vals[j] == bounds[-1]):
+            continue  # too few rows, NaN (Spark's largest value), or a repeat
+        bounds.append(vals[j])
+    # the assignment column is EXACTLY what refresh appends use, so bucket
+    # membership is stable across build and append
     out = (
-        base.drop("sbucket")
-        .withColumn("sbucket", assign_sort_bucket(F.col("value"), bounds))
+        rows.withColumn("sbucket", assign_sort_bucket(F.col("value"), bounds))
         .repartition("sbucket")
         .sortWithinPartitions("value")
         .select("sbucket", "value", "id")

@@ -5,21 +5,24 @@ create → insert → search(filter) → query(agg) → upsert → delete → co
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.client import MilvusSparkClient
 
 
 @pytest.fixture()
 def client(spark):
-    import os
-
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
-    root = tempfile.mkdtemp(prefix="msc_", dir="/root/repo/_scratch")
+    # plan assertions below look for an artifact's directory name in the
+    # scan location, which Spark cuts at 100 characters by default, and the
+    # scratch root's length depends on where the checkout lives
+    cut = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    root = mkdtemp("msc_")
     yield MilvusSparkClient(spark, root)
+    spark.conf.set("spark.sql.maxMetadataStringLength", cut)
     shutil.rmtree(root, ignore_errors=True)
 
 

@@ -4,12 +4,12 @@ contract — BASELINE.md vector-ops row), and partition pruning at the scan."""
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.ivf import build_centroids, ivf_search, l2_normalize, write_clustered
 from milvus_spark.operators.knn import brute_force_search
 
@@ -20,7 +20,7 @@ def clustered(spark, sf_dir):
     # COSINE collection → spherical k-means over normalized vectors
     norm = l2_normalize(emb, "embedding")
     cents = build_centroids(norm, "embedding", k=16, seed=42)
-    path = tempfile.mkdtemp(prefix="ivf_", dir="/root/repo/_scratch")
+    path = mkdtemp("ivf_")
     shutil.rmtree(path)
     write_clustered(norm, "embedding", cents, path)
     yield emb, norm, cents, path
@@ -107,7 +107,6 @@ def test_ivf_cosine_probe_is_scale_invariant(spark):
         build_centroids, ivf_search, l2_normalize, write_clustered,
     )
     from milvus_spark.operators.knn import brute_force_search
-    from milvus_spark.scratch import mkdtemp
 
     rng = np.random.default_rng(3)
     V = rng.normal(size=(400, 8))
@@ -325,3 +324,109 @@ def test_ivf_probe_dispatch_is_closure_mask_not_join(spark, clustered):
     plan = approx._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan, plan  # no probe join (this query has no filter)
     assert "PartitionFilters" in plan and "cluster_id" in plan
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, Spark jobs it ran), counted with the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup("jobs_of", "count jobs")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup("jobs_of"))
+        out = fn()
+        return out, len(set(sc.statusTracker().getJobIdsForGroup("jobs_of")) - before)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.fixture(scope="module")
+def train_files(spark, tmp_path_factory):
+    """One 2,000 × 8 corpus written as 1 file and as 4 files."""
+    rng = np.random.default_rng(5)
+    V = rng.normal(size=(2000, 8)) + 4 * rng.integers(0, 4, size=(2000, 1))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(V)], "id long, vec array<double>"
+    )
+    root = tmp_path_factory.mktemp("train")
+    one, four = str(root / "one"), str(root / "four")
+    df.coalesce(1).write.parquet(one)
+    df.repartition(4).write.parquet(four)
+    return spark.read.parquet(one), spark.read.parquet(four)
+
+
+def test_trainer_reads_one_bounded_sample_in_one_job(spark, train_files, monkeypatch):
+    """Centroid training collects at most SAMPLE_PER_LIST·k rows (and at
+    most SAMPLE_BYTES of float64) to the driver, in one Spark job."""
+    from milvus_spark.operators import ivf
+
+    one, _ = train_files
+    seen = []
+    real = ivf.kmeans
+    monkeypatch.setattr(ivf, "kmeans", lambda X, *a, **kw: seen.append(X.shape) or real(X, *a, **kw))
+    cents, jobs = _jobs_of(spark, lambda: ivf.build_centroids(one, "vec", k=4, seed=3, max_iter=5))
+    assert jobs == 1
+    assert cents.shape == (4, 8)
+    assert seen[-1] == (ivf.SAMPLE_PER_LIST * 4, 8)
+    monkeypatch.setattr(ivf, "SAMPLE_BYTES", 100 * 8 * 8)
+    ivf.build_centroids(one, "vec", k=4, seed=3, max_iter=5)
+    assert seen[-1] == (100, 8)
+
+
+def test_trainer_is_independent_of_partitioning(train_files):
+    """The same rows split 1 way and 4 ways train identical centroids."""
+    one, four = train_files
+    a = build_centroids(one, "vec", k=4, seed=9, max_iter=10)
+    b = build_centroids(four, "vec", k=4, seed=9, max_iter=10)
+    assert np.array_equal(a, b)
+
+
+def test_trainer_centroid_count_and_empty_collection(spark, tmp_path):
+    """min(k, distinct vectors) centroids, and create_index names an empty
+    collection instead of surfacing a JVM error."""
+    from milvus_spark.client import MilvusSparkClient
+
+    five = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(5)], "id long, v array<double>")
+    assert build_centroids(five, "v", k=8).shape == (5, 2)
+    two = spark.createDataFrame([(i, [float(i % 2), 1.0]) for i in range(9)], "id long, v array<double>")
+    assert sorted(map(tuple, build_centroids(two, "v", k=8))) == [(0.0, 1.0), (1.0, 1.0)]
+    client = MilvusSparkClient(spark, root=str(tmp_path))
+    client.create_collection("empt", pk_field="id", vector_field="v")
+    client.insert("empt", five)
+    client.delete("empt", ids=list(range(5)))
+    with pytest.raises(ValueError, match="empty collection 'empt'"):
+        client.create_index("empt", "v", "IVF_FLAT", {"nlist": 4})
+
+
+def test_sorted_edges_increase_and_ranges_equal_scan(spark, tmp_path):
+    """Sort-index bucket edges come from one sampling job and strictly
+    increase over a NaN-bearing double column and a string column; the
+    artifact write does not range-partition again (a shuffle job and a write
+    job); range reads equal the plain scan."""
+    from milvus_spark.operators.scalar_index import build_sorted, read_sorted_range
+
+    rows = [
+        (i, float("nan") if i % 4 == 0 else float(i % 97), f"k{(i * 7) % 61:02d}")
+        for i in range(800)
+    ]
+    df = spark.createDataFrame(rows, "id long, x double, s string")
+    cases = {
+        "x": [(None, 10.0), (20.0, 60.0), (50.0, None), (None, None)],
+        "s": [("k10", "k20"), (None, "k05"), ("k40", None)],
+    }
+    for field, ranges in cases.items():
+        (art, bounds), jobs = _jobs_of(spark, lambda: build_sorted(df, field, "id"))
+        assert jobs == 1
+        assert len(bounds) > 4
+        assert all(a < b for a, b in zip(bounds, bounds[1:])), bounds
+        path = str(tmp_path / field)
+        _, jobs = _jobs_of(spark, lambda: art.write.partitionBy("sbucket").parquet(path))
+        assert jobs <= 2
+        stored = spark.read.parquet(path)
+        for lo, hi in ranges:
+            cond = F.lit(True)
+            if lo is not None:
+                cond = cond & (F.col(field) >= lo)
+            if hi is not None:
+                cond = cond & (F.col(field) <= hi)
+            want = sorted(r.id for r in df.filter(cond).collect())
+            got = sorted(r.id for r in read_sorted_range(stored, bounds, lo, hi).collect())
+            assert got == want, (field, lo, hi)

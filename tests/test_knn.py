@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.rounding import round_half_up
 import pytest
 from pyspark.sql import functions as F
@@ -147,7 +148,6 @@ def test_binary_vector_client_search(spark, sf_dir):
     HAMMING/JACCARD brute force vs numpy ground truth (binary wire format,
     Types.h BinaryVector; knowhere binary metric family)."""
     import shutil
-    import tempfile
 
     import numpy as np
     from pyspark.sql import functions as F
@@ -164,7 +164,7 @@ def test_binary_vector_client_search(spark, sf_dir):
         [(int(i), [int(b) for b in v]) for i, v in packed.items()],
         "vec_id long, bvec array<smallint>",
     )
-    root = tempfile.mkdtemp(prefix="bvc_", dir="/root/repo/_scratch")
+    root = mkdtemp("bvc_")
     try:
         client = MilvusSparkClient(spark, root)
         client.create_collection("bv", pk_field="vec_id", vector_field="bvec", metric_type="HAMMING")

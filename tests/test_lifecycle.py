@@ -5,17 +5,17 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.lifecycle import Collection
 
 
 @pytest.fixture()
 def coll(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="lc_", dir="/root/repo/_scratch")
+    d = mkdtemp("lc_")
     shutil.rmtree(d)
     c = Collection(spark, d, pk="o_orderkey")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -202,3 +202,33 @@ def test_changes_guarded_by_compaction_watermark(spark, tmp_path):
 
     assert not os.path.isdir(str(tmp_path / "cdc" / "segments.old"))
     assert not os.path.isdir(str(tmp_path / "cdc" / "segments.compacting"))
+
+
+def test_metadata_json_write_is_atomic(coll, monkeypatch):
+    """A dump that dies half-way (disk full, crash) must leave the previous
+    cdc_watermark.json / partition_stats.json readable and unchanged: the
+    writes go to a temp file that replaces the old one only when complete."""
+    import json
+
+    c, _ = coll
+    c._record_cdc_watermark()
+    c.compact_clustering("o_custkey", num_partitions=2)
+    paths = [os.path.join(c.path, n) for n in ("cdc_watermark.json", "partition_stats.json")]
+    before = [open(p).read() for p in paths]
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:7])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        c._record_cdc_watermark()
+    with pytest.raises(OSError, match="disk full"):
+        c.compact_clustering("o_custkey", num_partitions=2)
+    monkeypatch.undo()
+    for p, text in zip(paths, before):
+        with open(p) as f:
+            assert f.read() == text
+        with open(p) as f:
+            json.load(f)
+    assert not [n for n in os.listdir(c.path) if n.endswith(".tmp")]

@@ -5,12 +5,12 @@ known truth, tests/python_client search-test style)."""
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.lsh import (
     embedding_near_dup,
     hyperplane_tables,
@@ -70,7 +70,7 @@ def test_candidate_set_is_subquadratic(spark, planted):
 def test_lsh_topk_search_finds_planted_neighbor(spark, planted):
     df, V = planted
     H = hyperplanes(DIM, nbits=6)
-    path = tempfile.mkdtemp(prefix="lshb_", dir="/root/repo/_scratch")
+    path = mkdtemp("lshb_")
     shutil.rmtree(path)
     try:
         write_bucketed(df, "embedding", H, path)

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
+
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -228,12 +230,10 @@ def test_partition_key_filter_prunes_directories(spark, sf_dir):
     reference's partition-key routing (task_search.go:196-225)."""
     import os
     import shutil
-    import tempfile
 
     from milvus_spark.client import MilvusSparkClient
 
-    os.makedirs("/root/repo/_scratch", exist_ok=True)
-    root = tempfile.mkdtemp(prefix="pkplan_", dir="/root/repo/_scratch")
+    root = mkdtemp("pkplan_")
     try:
         client = MilvusSparkClient(spark, root)
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")

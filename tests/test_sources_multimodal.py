@@ -4,13 +4,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.multimodal import (
     decode_image,
     frame_sample,
@@ -28,7 +28,7 @@ from milvus_spark.sources.bulk_import import (
 
 @pytest.fixture()
 def scratch():
-    d = tempfile.mkdtemp(prefix="imp_", dir="/root/repo/_scratch")
+    d = mkdtemp("imp_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 

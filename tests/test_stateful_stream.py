@@ -5,12 +5,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.streaming.stateful import (
     WAL_SCHEMA,
     materialize_wal,
@@ -20,7 +20,7 @@ from milvus_spark.streaming.stateful import (
 
 @pytest.fixture()
 def scratch():
-    d = tempfile.mkdtemp(prefix="stateful_t_", dir="/root/repo/_scratch")
+    d = mkdtemp("stateful_t_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 

@@ -5,18 +5,18 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from milvus_spark.scratch import mkdtemp
 from milvus_spark.operators.lifecycle import Collection
 from milvus_spark.streaming.ingest import run_available_now, stream_ingest, windowed_counts
 
 
 @pytest.fixture()
 def scratch():
-    d = tempfile.mkdtemp(prefix="stream_", dir="/root/repo/_scratch")
+    d = mkdtemp("stream_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
